@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
  *          --graph g [--mode stream|stats|write] [--output DIR]
  *          [--checkpoint DIR] [--store DIR] [--dim N] [--iterations N]
  *          [--epochs N]
+ *   (--checkpoint: pagerank, wcc and lpa only; other algorithms refuse it)
  *   GdsApp list|drop --graph g [--store DIR]
  *
  * The durable catalog is a directory of parquet graphs
@@ -69,11 +70,15 @@ object GdsApp {
 
       case "run" =>
         val algo = required(opts, "algo")
-        val opts2 = opts
-        val name = required(opts2, "graph")
-        val mode = opts2.getOrElse("mode", "stream")
+        val name = required(opts, "graph")
+        val mode = opts.getOrElse("mode", "stream")
+        // only the superstep algorithms read a checkpoint dir; refuse it
+        // elsewhere rather than silently running without one
+        if (opts.contains("checkpoint") && !checkpointable(algo))
+          throw new IllegalArgumentException(s"--checkpoint is not supported " +
+            s"by '$algo' (only ${checkpointable.mkString(", ")} checkpoint)")
         val g = load(spark, store, name)
-        val pregel = PregelConfig(checkpointDir = opts2.get("checkpoint"))
+        val pregel = PregelConfig(checkpointDir = opts.get("checkpoint"))
         val result: DataFrame = algo match {
           case "pagerank" => PageRank.run(g, PageRank.Config(pregel = pregel))
           case "wcc" => Wcc.run(g, Wcc.Config(pregel = pregel))
@@ -82,18 +87,18 @@ object GdsApp {
           case "degree" => DegreeCentrality.run(g)
           case "fastrp" => graft.pipeline.FastRP.run(g,
             graft.pipeline.FastRP.Config(
-              embeddingSize = opts2.getOrElse("dim", "64").toInt))
+              embeddingSize = opts.getOrElse("dim", "64").toInt))
           case "node2vec" => graft.pipeline.Node2Vec.run(g,
             graft.pipeline.Node2Vec.Config(
-              embeddingSize = opts2.getOrElse("dim", "128").toInt,
-              iterations = opts2.getOrElse("iterations", "1").toInt))
+              embeddingSize = opts.getOrElse("dim", "128").toInt,
+              iterations = opts.getOrElse("iterations", "1").toInt))
           case "graphsage" =>
             val feats = graft.pipeline.GraphSage.degreeFeatures(g, normalized = true)
             // --layers d1,d2,... selects the multi-layer Adam trainer;
             // without it the single-layer identity fast path runs.
-            opts2.get("layers") match {
+            opts.get("layers") match {
               case Some(spec) =>
-                if (opts2.contains("dim"))
+                if (opts.contains("dim"))
                   sys.error("--dim and --layers are exclusive: the " +
                     "multi-layer trainer's output dim is the last --layers entry")
                 val dimsParsed = spec.split(',').map(_.trim).filter(_.nonEmpty)
@@ -101,7 +106,7 @@ object GdsApp {
                     sys.error(s"--layers expects comma-separated ints, got '$spec'")))
                 if (dimsParsed.isEmpty)
                   sys.error(s"--layers expects comma-separated ints, got '$spec'")
-                val sampled = opts2.get("samples").map(_.split(',')
+                val sampled = opts.get("samples").map(_.split(',')
                   .map(_.trim).filter(_.nonEmpty).map(d => d.toIntOption
                     .getOrElse(sys.error(
                       s"--samples expects comma-separated ints, got '$d'")))
@@ -109,17 +114,17 @@ object GdsApp {
                 graft.pipeline.GraphSage.trainLayers(g, feats,
                   graft.pipeline.GraphSage.TrainLayersConfig(
                     layerDims = dimsParsed.toSeq,
-                    activation = opts2.getOrElse("activation", "sigmoid"),
+                    activation = opts.getOrElse("activation", "sigmoid"),
                     sampleSizes = sampled,
-                    epochs = opts2.getOrElse("epochs", "5").toInt)).embeddings
+                    epochs = opts.getOrElse("epochs", "5").toInt)).embeddings
               case None =>
-                if (opts2.contains("samples"))
+                if (opts.contains("samples"))
                   sys.error("--samples requires --layers (the single-layer " +
                     "fast path always uses full neighborhoods)")
                 graft.pipeline.GraphSage.train(g, feats,
                   graft.pipeline.GraphSage.Config(
-                    embeddingSize = opts2.getOrElse("dim", "16").toInt,
-                    epochs = opts2.getOrElse("epochs", "5").toInt)).embeddings
+                    embeddingSize = opts.getOrElse("dim", "16").toInt,
+                    epochs = opts.getOrElse("epochs", "5").toInt)).embeddings
             }
           case other => sys.error(s"unknown algorithm: $other")
         }
@@ -133,7 +138,7 @@ object GdsApp {
             println(s"""{"rows":${s.rows},"histogram":{${
               s.histogram.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}""")
           case "write" =>
-            val out = required(opts2, "output")
+            val out = required(opts, "output")
             val w = ExecutionModes.write(result, out)
             println(s"""{"rowsWritten":${w.rowsWritten},"writeMillis":${w.writeMillis},"path":"${w.path}"}""")
           case other =>
@@ -154,6 +159,9 @@ object GdsApp {
       case _ => usage(); sys.error(s"unknown command: $cmd")
     }
   }
+
+  /** Algorithms that run on Pregel.run and so honour `--checkpoint`. */
+  private val checkpointable = Set("pagerank", "wcc", "lpa")
 
   private def load(spark: SparkSession, store: String, name: String): PropertyGraph =
     PropertyGraph(
@@ -186,6 +194,7 @@ object GdsApp {
       |       GdsApp run <pagerank|wcc|lpa|triangles|degree|fastrp|node2vec|graphsage>
       |              --graph <name> [--mode stream|stats|write] [--output DIR]
       |              [--checkpoint DIR] [--dim N] [--iterations N] [--epochs N]
+      |              (--checkpoint: pagerank, wcc, lpa only)
       |              (the algorithm may also be passed as --algo <name>)
       |       GdsApp list | drop --graph <name>""".stripMargin)
 }

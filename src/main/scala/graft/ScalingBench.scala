@@ -151,11 +151,13 @@ object ScalingBench {
           workEdges * wccPair._2.supersteps / wccSec)
       }
       if (algos("lpa")) {
-        val (_, lpaSec) = time {
-          val r = LabelPropagation.run(g, LabelPropagation.Config(maxIterations = 10))
-          r.count(); r
+        val (lpa, lpaSec) = time {
+          val (r, m) = LabelPropagation.runWithMetrics(g,
+            LabelPropagation.Config(maxIterations = 10))
+          r.count(); m
         }
-        timings += AlgoTiming("lpa", lpaSec, 10, workEdges * 10 / lpaSec)
+        timings += AlgoTiming("lpa", lpaSec, lpa.supersteps,
+          workEdges * lpa.supersteps / lpaSec)
       }
       if (algos("triangle_count")) {
         val (_, tcSec) = time(TriangleCount.globalCount(g))

@@ -54,8 +54,7 @@ object ArticleRank {
         (lit(d) * coalesce(col(MSG), lit(0.0)) > config.tolerance &&
           col("deg") > 0.0).as(ACTIVE),
         (lit(d) * coalesce(col(MSG), lit(0.0)) > config.tolerance).as(CHANGED)),
-      config = config.pregel.copy(maxIterations = config.maxIterations,
-        edgesPrepared = true))
+      config = config.pregel.copy(maxIterations = config.maxIterations))
       .vertices.select(col("id"), col("rank").as("score"))
   }
 }

@@ -32,13 +32,18 @@ import org.apache.spark.sql.functions._
  *
  * No active-set pruning: unlike sum/min folds, the weighted-argmax vote is
  * not incremental — an unchanged neighbor still participates in every
- * re-tally — so each iteration re-tallies every node's full neighborhood.
- * (The reference does the same: every iteration sweeps all nodes,
- * LabelPropagation.java:148-170.)
+ * re-tally — so every vertex stays active and each iteration re-tallies
+ * every node's full neighborhood. (The reference does the same: every
+ * iteration sweeps all nodes, LabelPropagation.java:148-170.)
  *
- * Spark plan per iteration: hash join (edges ⋈ labels on dst) → two hash
- * aggregates ((id,label)→Σw partial+final, then max_by argmax) →
- * left-join update; lineage cut with localCheckpoint per iteration.
+ * Runs on [[Pregel.run]]: a node pulls labels from its out-neighbors, so
+ * labels scatter along the REVERSED orientation, one
+ * `struct(label, weight * nodeWeight)` message per edge (parallel edges
+ * stay separate votes — Aggregation.None), tallied by
+ * [[Combiners.weightedArgmax]]. The per-superstep plan, AQE gating,
+ * release of superseded state and `Config.pregel` (checkpointDir,
+ * checkpointEvery, stopAfter, trackMetrics — so checkpoint and resume)
+ * all come from the engine.
  */
 object LabelPropagation {
 
@@ -51,27 +56,18 @@ object LabelPropagation {
 
   /** @return (id, label) */
   def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)
+    runWithMetrics(graph, config)._1
 
-  private def runImpl(graph: PropertyGraph, config: Config): DataFrame = {
-    // partition once by the join key (dst — labels are pulled from the
-    // neighbor side) and sort inside each partition; localCheckpoint (NOT
-    // cutLineage, which rebuilds the frame and drops outputPartitioning/
-    // ordering) preserves the layout across iterations so only the small
-    // label side shuffles AND only the small side sorts per round — the
-    // per-round re-sort of the big edge side was the dominant superstep
-    // cost on the 46 M-edge scaling graph.
-    // (AQE off during the eager checkpoint, or the captured partitioning
-    // is UnknownPartitioning — see PropertyGraph.pregelEdges.)
-    val edges = Lineage.withFastIteration(graph.spark, enabled = true) {
-      graph.oriented(config.orientation)
-        .select(col("src"), col("dst"), col("weight"))
-        .repartition(col("dst"))
-        .sortWithinPartitions("dst")
-        .localCheckpoint(true)
+  /** @return ((id, label), pregel result with superstep metrics) */
+  def runWithMetrics(graph: PropertyGraph, config: Config = Config()): (DataFrame, PregelResult) = {
+    import Pregel._
+
+    val scatter = config.orientation match {
+      case Orientation.Natural    => Orientation.Reverse
+      case Orientation.Reverse    => Orientation.Natural
+      case Orientation.Undirected => Orientation.Undirected
     }
-    val bigWork = edges.count() >= Lineage.aqeOffMinEdges(graph.spark)
-    Lineage.withFastIteration(graph.spark, bigWork) {
+    val edges = graph.pregelEdges(scatter, Aggregation.None)
 
     val initLabel = config.seedProperty match {
       case Some(p) => col(p).cast("long")
@@ -81,36 +77,28 @@ object LabelPropagation {
       case Some(p) => col(p).cast("double")
       case None    => lit(1.0)
     }
+    val initial = graph.nodes.select(
+      col("id"),
+      initLabel.as("label"),
+      nodeWeight.as("nodeWeight"),
+      lit(true).as(ACTIVE),
+      lit(true).as(CHANGED),
+      lit(0.0).as(DELTA))
 
-    var labels = graph.nodes
-      .select(col("id"), initLabel.as("label"), nodeWeight.as("nodeWeight"))
-      .cutLineage()
+    val newLabel = coalesce(col(MSG), col("label"))
+    val result = Pregel.run(
+      initial = initial,
+      edges = edges,
+      msgExpr = struct(col("label"), (col("weight") * col("nodeWeight")).as("w")),
+      combine = Combiners.weightedArgmax,
+      updateExprs = Seq(
+        newLabel.as("label"),
+        col("nodeWeight"),
+        lit(true).as(ACTIVE),
+        (newLabel =!= col("label")).as(CHANGED),
+        lit(0.0).as(DELTA)),
+      config = config.pregel.copy(maxIterations = config.maxIterations))
 
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < config.maxIterations) {
-      // pull: each node tallies votes from its (oriented) out-neighbors.
-      val votes = edges
-        .join(labels.select(col("id").as("dst"), col("label"),
-          col("nodeWeight")), Seq("dst"))
-        .groupBy(col("src").as("id"), col("label"))
-        .agg(sum(col("weight") * col("nodeWeight")).as("w"))
-        .groupBy("id")
-        .agg(expr("max_by(label, named_struct('w', w, 'nl', -label))").as("newLabel"))
-
-      val updated = labels.join(votes, Seq("id"), "left_outer")
-        .select(col("id"),
-          coalesce(col("newLabel"), col("label")).as("label"),
-          col("nodeWeight"),
-          (coalesce(col("newLabel"), col("label")) =!= col("label")).as("ch"))
-        .cutLineage()
-
-      changed = updated.where(col("ch")).count()
-      Lineage.release(labels)
-      labels = updated.drop("ch")
-      iter += 1
-    }
-    labels.select(col("id"), col("label"))
-    } // withFastIteration
+    (result.vertices.select(col("id"), col("label")), result)
   }
 }

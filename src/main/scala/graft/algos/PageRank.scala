@@ -91,8 +91,7 @@ object PageRank {
           col(degCol) > 0.0).as(ACTIVE),
         // converged when NO node moved more than tolerance this superstep
         (lit(d) * coalesce(col(MSG), lit(0.0)) > config.tolerance).as(CHANGED)),
-      config = config.pregel.copy(maxIterations = config.maxIterations,
-        edgesPrepared = true))
+      config = config.pregel.copy(maxIterations = config.maxIterations))
     result
   }
 }

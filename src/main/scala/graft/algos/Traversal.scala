@@ -44,7 +44,7 @@ object Traversal {
         (coalesce(col(MSG), col("level")) < col("level")).as(ACTIVE),
         (coalesce(col(MSG), col("level")) < col("level")).as(CHANGED),
         lit(0.0).as(DELTA)),
-      config = pregel.copy(maxIterations = maxDepth, edgesPrepared = true))
+      config = pregel.copy(maxIterations = maxDepth))
 
     result.vertices.select(col("id"),
       when(col("level") === Long.MaxValue, -1L).otherwise(col("level")).as("level"))
@@ -81,7 +81,7 @@ object Traversal {
         (coalesce(col(MSG), col("dist")) < col("dist")).as(ACTIVE),
         (coalesce(col(MSG), col("dist")) < col("dist")).as(CHANGED),
         lit(0.0).as(DELTA)),
-      config = pregel.copy(maxIterations = maxIterations, edgesPrepared = true))
+      config = pregel.copy(maxIterations = maxIterations))
 
     result.vertices.select(col("id"), col("dist").as("distance"))
   }

@@ -79,8 +79,7 @@ object Wcc {
         (coalesce(col(MSG), col("component")) < col("component")).as(ACTIVE),
         (coalesce(col(MSG), col("component")) < col("component")).as(CHANGED),
         lit(0.0).as(DELTA)),
-      config = config.pregel.copy(maxIterations = config.maxIterations,
-        edgesPrepared = true))
+      config = config.pregel.copy(maxIterations = config.maxIterations))
 
     val comps = result.vertices.select(col("id"), col("component"))
     (if (config.consecutiveIds) consecutive(comps) else comps, result)

@@ -105,13 +105,11 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
    * localCheckpoint — which preserves BOTH the partitioning and the
    * ordering on the resulting LogicalRDD. Every superstep's
    * edges⋈frontier sort-merge join then needs neither an exchange nor a
-   * sort on the (large, static) edge side; previously each superstep
-   * re-shuffled (via aggregated → Pregel's own repartition, two full
-   * shuffles of setup) and re-SORTED the full edge frame inside the join.
+   * sort on the (large, static) edge side.
    *
-   * Hand the result to [[graft.core.Pregel.run]] with
-   * `PregelConfig.edgesPrepared = true`; Pregel releases the checkpoint
-   * blocks when the loop ends, so don't reuse the frame after the run.
+   * This is the only edge frame [[graft.core.Pregel.run]] accepts; Pregel
+   * releases the checkpoint blocks when the loop ends, so don't reuse the
+   * frame after the run.
    *
    * @param withWeight false drops the weight column entirely —
    *        connectivity algorithms (WCC) never read it, and the

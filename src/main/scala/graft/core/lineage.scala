@@ -28,27 +28,25 @@ object Lineage {
    * frames are tiny, pre-partitioned, and skew-free by construction. AQE
    * stays on for one-shot heavy queries (triangle count, dedup joins),
    * where its skew/coalesce handling is worth the re-planning latency.
-   */
-  def withFastIteration[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
-    withFastIteration(spark, enabled = true)(body)
-
-  /** `enabled = false` is a no-op passthrough: loops over SMALL frames keep
-   *  AQE — its runtime broadcast conversion and partition coalescing are a
-   *  measured 2-3× win there (bench r2: louvain 17→58 s, scc 12→32 s when
-   *  AQE was blanket-disabled), while big superstep frames measure the
-   *  opposite (re-planning latency, nothing to broadcast). Callers gate on
-   *  the edge-frame row count (see Pregel.run).
    *
-   *  CONCURRENCY CONTRACT (ADVICE r2): the toggle mutates the session conf
-   *  for the loop's duration, so algorithm runs assume a single-threaded
-   *  driver — a query submitted CONCURRENTLY on the same SparkSession
-   *  while a big iterative loop is in flight would silently run without
-   *  AQE (and concurrent save/restore could race). This matches how every
-   *  entry point here drives Spark (Verify/Bench/GdsApp are sequential);
-   *  callers running algorithms from multiple driver threads must hand
-   *  each thread its own `SparkSession.newSession()` (configs are
-   *  session-scoped; cached data is shared via SharedState, so the split
-   *  costs nothing). */
+   * `enabled = false` is a no-op passthrough: loops over SMALL frames keep
+   * AQE — its runtime broadcast conversion and partition coalescing are a
+   * measured 2-3× win there (bench r2: louvain 17→58 s, scc 12→32 s when
+   * AQE was blanket-disabled), while big superstep frames measure the
+   * opposite (re-planning latency, nothing to broadcast). Callers gate on
+   * the edge-frame row count (see Pregel.run).
+   *
+   * CONCURRENCY CONTRACT (ADVICE r2): the toggle mutates the session conf
+   * for the loop's duration, so algorithm runs assume a single-threaded
+   * driver — a query submitted CONCURRENTLY on the same SparkSession
+   * while a big iterative loop is in flight would silently run without
+   * AQE (and concurrent save/restore could race). This matches how every
+   * entry point here drives Spark (Verify/Bench/GdsApp are sequential);
+   * callers running algorithms from multiple driver threads must hand
+   * each thread its own `SparkSession.newSession()` (configs are
+   * session-scoped; cached data is shared via SharedState, so the split
+   * costs nothing).
+   */
   def withFastIteration[A](spark: org.apache.spark.sql.SparkSession,
       enabled: Boolean)(body: => A): A = {
     if (!enabled) body

@@ -27,20 +27,13 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  *                        dir is configured)
  * @param stopAfter       test hook: abort the loop after superstep k as if
  *                        the job died (used by resume tests)
- * @param edgesPrepared   the caller already shaped the edge frame via
- *                        [[PropertyGraph.pregelEdges]] (hash(src)-
- *                        partitioned, sorted within partitions,
- *                        checkpointed) — skip the engine's own
- *                        repartition+sort+checkpoint, avoiding a second
- *                        full shuffle and materialization of the edges
  */
 final case class PregelConfig(
     maxIterations: Int = 20,
     checkpointDir: Option[String] = None,
     checkpointEvery: Int = 1,
     trackMetrics: Boolean = false, // forced on whenever checkpointDir is set
-    stopAfter: Option[Int] = None,
-    edgesPrepared: Boolean = false)
+    stopAfter: Option[Int] = None)
 
 /** One superstep's lineage record (north rule: "every superstep writes
  *  per-partition lineage and metrics — messages sent, delta norm, skew
@@ -104,7 +97,10 @@ object Pregel {
    * @param initial   vertex frame: `id: long`, state columns, plus ACTIVE /
    *                  CHANGED / DELTA markers (init step = reference
    *                  PregelComputation.init)
-   * @param edges     `src, dst, weight` (orientation already applied)
+   * @param edges     `src, dst[, weight]` as shaped by
+   *                  [[PropertyGraph.pregelEdges]] (orientation applied,
+   *                  hash(src)-partitioned, sorted, checkpointed); the
+   *                  engine releases its blocks when the loop ends
    * @param msgExpr   message value, evaluated on edge rows joined with the
    *                  *source* vertex state (all state cols visible, plus
    *                  `weight`) — reference sendToNeighbors /
@@ -126,31 +122,11 @@ object Pregel {
     val spark = initial.sparkSession
     val ckpt = config.checkpointDir.map(new CheckpointManager(_))
 
-    // Hash-partition the (large, static) edge relation by the join key
-    // ONCE and sort it by src INSIDE each partition; localCheckpoint (NOT
-    // cutLineage — it must keep the partitioning and ordering, and a
-    // once-carried stat can't grow) lets every superstep's edges⋈vertices
-    // sort-merge join reuse BOTH: no exchange and no re-sort of the big
-    // side per superstep (the re-sort was measured at ~60% of a WCC
-    // superstep's wall on the 46 M-edge scaling graph). This is the
-    // per-superstep shuffle-minimization the north rule calls out.
-    // `edgesPrepared` callers did this themselves via pregelEdges —
-    // folding the parallel-edge aggregation into the same single shuffle.
-    // AQE must be OFF while the eager checkpoint materializes, or the
-    // LogicalRDD snapshots the unfinalized adaptive plan's partitioning —
-    // UnknownPartitioning — and every superstep silently re-shuffles AND
-    // re-sorts the full edge frame (see PropertyGraph.pregelEdges).
-    val edgesPart =
-      if (config.edgesPrepared) edges
-      else Lineage.withFastIteration(spark, enabled = true) {
-        edges.repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
-      }
     // AQE off only when the superstep frame is big enough that broadcast
     // conversion can't apply and re-planning latency dominates (measured
     // both ways — see Lineage.withFastIteration scaladoc). The count scans
-    // the just-checkpointed blocks, not the source.
-    val bigWork = edgesPart.count() >= Lineage.aqeOffMinEdges(spark)
+    // the checkpointed edge blocks, not the source.
+    val bigWork = edges.count() >= Lineage.aqeOffMinEdges(spark)
     Lineage.withFastIteration(spark, bigWork) {
 
     var superstep = ckpt.flatMap(_.latestSuperstep).getOrElse(0)
@@ -166,8 +142,8 @@ object Pregel {
 
       // scatter: active sources emit along their out-edges, then combine.
       val active = state.where(col(ACTIVE))
-      val raw = edgesPart.join(active, edgesPart("src") === active("id"))
-        .select(edgesPart("dst").as("id"), msgExpr.as(MSG))
+      val raw = edges.join(active, edges("src") === active("id"))
+        .select(edges("dst").as("id"), msgExpr.as(MSG))
       val track = config.trackMetrics || ckpt.isDefined
       // metrics cost one extra pass over the (small, pre-combined) message
       // frame; skip it entirely when nobody will read the lineage.
@@ -227,7 +203,7 @@ object Pregel {
       }
     }
 
-    Lineage.release(edgesPart)
+    Lineage.release(edges)
     PregelResult(state, superstep, converged, history.toSeq)
     } // withFastIteration
   }

@@ -751,8 +751,9 @@ object GraphSage {
     val emb = normalizedEmbedding(hsF.last, dims.last).cutLineage()
     msF.drop(1).foreach(Lineage.release); hsF.foreach(Lineage.release)
     Lineage.release(m1)
-    (layerCnts :+ fullContribs).distinct.foreach(Lineage.release)
-    layerContribs.distinct.filterNot(_ eq fullContribs).foreach(Lineage.release)
+    // the sampled path already released fullContribs above; on the full
+    // path layerContribs holds it, so each frame is released exactly once
+    (layerCnts ++ layerContribs).distinct.foreach(Lineage.release)
     TrainLayersResult(layers, losses.toSeq, emb)
   }
 }

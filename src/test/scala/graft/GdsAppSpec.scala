@@ -56,6 +56,27 @@ class GdsAppSpec extends SparkSpec {
     assert(!new java.io.File(s"$store/g1").exists())
   }
 
+  test("--checkpoint: lpa writes superstep state, triangles refuses before any work") {
+    val store = freshStore()
+    GdsApp.dispatch(spark, "create",
+      Map("input" -> writeCodeFiles(freshStore()), "graph" -> "g3"), store)
+    val lpaDir = s"${freshStore()}/lpa"
+    GdsApp.dispatch(spark, "run",
+      Map("algo" -> "lpa", "graph" -> "g3", "checkpoint" -> lpaDir), store)
+    val supersteps = Option(new java.io.File(lpaDir).listFiles())
+      .getOrElse(Array.empty).filter(_.getName.startsWith("superstep="))
+    assert(supersteps.nonEmpty)
+    assert(supersteps.forall(d => new java.io.File(d, "state/_SUCCESS").exists()))
+
+    val triDir = s"${freshStore()}/triangles"
+    val e = intercept[IllegalArgumentException] {
+      GdsApp.dispatch(spark, "run",
+        Map("algo" -> "triangles", "graph" -> "g3", "checkpoint" -> triDir), store)
+    }
+    assert(e.getMessage.contains("triangles"))
+    assert(!new java.io.File(triDir).exists())
+  }
+
   test("unknown algorithm and unknown command are errors, not exits") {
     val store = freshStore()
     GdsApp.dispatch(spark, "create",

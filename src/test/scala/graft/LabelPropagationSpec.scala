@@ -1,7 +1,8 @@
 package graft
 
-import graft.algos.LabelPropagation
+import graft.algos.{LabelPropagation, Wcc}
 import graft.core._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -81,5 +82,18 @@ class LabelPropagationSpec extends SparkSpec {
     val a = longs(LabelPropagation.run(fixture, LabelPropagation.Config(maxIterations = 5)))
     val g2 = PropertyGraph(fixture.nodes.repartition(5), fixture.edges.repartition(7))
     assert(longs(LabelPropagation.run(g2, LabelPropagation.Config(maxIterations = 5))) == a)
+  }
+
+  test("an LPA run leaves no more persisted RDDs behind than a WCC run") {
+    val sc = spark.sparkContext
+    def newPersisted(run: => DataFrame): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      run.count()
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    val wcc = newPersisted(Wcc.run(fixture))
+    val lpa = newPersisted(LabelPropagation.run(fixture))
+    // both keep only their result frame; the edge checkpoint is released
+    assert(lpa <= wcc, s"LPA left $lpa persisted RDDs, WCC $wcc")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.algos.{PageRank, Wcc}
+import graft.algos.{LabelPropagation, PageRank, Wcc}
 import graft.core._
 import java.nio.file.Files
 
@@ -36,6 +36,22 @@ class PregelCheckpointSpec extends SparkSpec {
     val resumed = longs(Wcc.run(chainGraph,
       Wcc.Config(pregel = PregelConfig(checkpointDir = Some(dir)))))
     val fresh = longs(Wcc.run(chainGraph))
+    assert(resumed == fresh)
+  }
+
+  test("LPA killed at superstep 3 resumes to labels identical to a fresh run") {
+    val dir = tmpDir("lpa-ckpt")
+    intercept[PregelKilledException] {
+      LabelPropagation.run(chainGraph, LabelPropagation.Config(
+        pregel = PregelConfig(checkpointDir = Some(dir), stopAfter = Some(3)))).count()
+    }
+    val ckpt = new CheckpointManager(dir)
+    assert(ckpt.latestSuperstep.contains(3))
+    assert(ckpt.lineage.size == 3)
+
+    val resumed = longs(LabelPropagation.run(chainGraph, LabelPropagation.Config(
+      pregel = PregelConfig(checkpointDir = Some(dir)))))
+    val fresh = longs(LabelPropagation.run(chainGraph))
     assert(resumed == fresh)
   }
 
