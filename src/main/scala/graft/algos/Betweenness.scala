@@ -41,10 +41,7 @@ object Betweenness {
   }
 
   /** @return (id, score) for every node (0.0 where no dependency). */
-  def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)
-
-  private def runImpl(graph: PropertyGraph, config: Config): DataFrame = {
+  def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
     val divisor = if (config.orientation == Orientation.Undirected) 2.0 else 1.0
     // forward phase joins on src every level: prepared src layout; the
     // self-loop filter on top preserves partitioning and ordering.
@@ -53,11 +50,7 @@ object Betweenness {
       .where(col("src") =!= col("dst"))
     // backward phase joins on dst every level: ONE extra shuffle of the
     // already-deduped frame buys exchange/sort-free joins down the levels.
-    val spark = graph.nodes.sparkSession
-    val edgesByDst = Lineage.withFastIteration(spark, enabled = true) {
-      edges.repartition(col("dst")).sortWithinPartitions("dst")
-        .localCheckpoint(true)
-    }
+    val edgesByDst = Lineage.sortedCheckpoint(edges.repartition(col("dst")), "dst")
     val srcs = config.sources.getOrElse(graph.nodes.select(col("id")))
 
     // ---- forward phase: batched multi-source BFS with σ accumulation.

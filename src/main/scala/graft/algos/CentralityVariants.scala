@@ -73,11 +73,7 @@ object Eigenvector {
       orientation: Orientation = Orientation.Natural)
 
   /** @return (id, score) */
-  def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)
-
-  private def runImpl(graph: PropertyGraph, config: Config): DataFrame = {
-    val spark = graph.nodes.sparkSession
+  def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
     // Pregel's prepared layout (PropertyGraph.pregelEdges): the static
     // edge relation is hash(src)-partitioned, distinct'd partition-locally,
     // sorted within partitions, and checkpointed in ONE shuffle — each
@@ -88,41 +84,35 @@ object Eigenvector {
     // Pregel-based PageRank on the same 5.8M-row frame).
     val edges = graph.pregelEdges(config.orientation, Aggregation.Count,
       withWeight = false)
-    val bigWork = edges.count() >= Lineage.aqeOffMinEdges(spark)
-    Lineage.withFastIteration(spark, bigWork) {
+    import Pregel._
     val n = graph.nodes.count()
+    val initial = graph.nodes.select(col("id"), lit(1.0 / n).as("rank"),
+      lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
 
-    var ranks = graph.nodes.select(col("id"), lit(1.0 / n).as("rank"))
-      .cutLineage()
-
-    var iter = 0
-    var moved = Double.MaxValue
-    while (moved > config.tolerance && iter < config.maxIterations) {
+    val result = Pregel.iterate(initial, edges,
+        PregelConfig(maxIterations = config.maxIterations)) { (ranks, _) =>
       val sums = edges
-        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+        .join(ranks.select(col("id").as("src"), col("rank")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum("rank").as("s"))
       val raw = ranks.select(col("id"), col("rank").as("old"))
         .join(sums, Seq("id"), "left_outer")
         .select(col("id"), col("old"), coalesce(col("s"), lit(0.0)).as("s"))
         .cutLineage()
+      // the norm stays an aggregate of its own, not an observed stat, so
+      // its summation order is the aggregate's
       val norm = math.sqrt(
         raw.agg(sum(col("s") * col("s"))).head().getDouble(0))
       // zero-norm fallback: keep the raw sums (all 0.0) — matches the SQL
       // oracle's CASE WHEN nrm = 0 THEN s (ADVICE r1: engine/oracle must
       // agree on edgeless graphs).
-      val next =
-        if (norm == 0.0) raw.select(col("id"), col("old"), col("s").as("rank"))
-        else raw.select(col("id"), col("old"), (col("s") / norm).as("rank"))
-      val nextC = next.cutLineage()
-      moved = nextC.agg(max(abs(col("rank") - col("old")))).head().getDouble(0)
-      Lineage.release(ranks)
-      Lineage.release(raw)
-      ranks = nextC.select(col("id"), col("rank"))
-      iter += 1
+      val rank = if (norm == 0.0) col("s") else col("s") / norm
+      // converged when the max per-node movement is ≤ tolerance
+      StepPlan(raw.select(col("id"), rank.as("rank"), lit(true).as(ACTIVE),
+          (abs(rank - col("old")) > config.tolerance).as(CHANGED),
+          (rank - col("old")).as(DELTA)),
+        cleanup = () => Lineage.release(raw))
     }
-    val out = ranks.select(col("id"), col("rank").as("score"))
     Lineage.release(edges)
-    out
-    }
+    result.vertices.select(col("id"), col("rank").as("score"))
   }
 }

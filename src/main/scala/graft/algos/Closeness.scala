@@ -33,10 +33,7 @@ object Closeness {
       orientation: Orientation = Orientation.Undirected)
 
   /** @return (id, closeness, harmonic) */
-  def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)
-
-  private def runImpl(graph: PropertyGraph, config: Config): DataFrame = {
+  def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
     val spark = graph.nodes.sparkSession
     // prepared layout: one shuffle, partition-local distinct, sorted —
     // every MS-BFS wave's edges⋈frontier join reuses it exchange- and

@@ -23,10 +23,7 @@ object K1Coloring {
   final case class Config(maxIterations: Int = 50)
 
   /** @return (id, color) proper coloring of the undirected simple graph */
-  def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)
-
-  private def runImpl(graph: PropertyGraph, config: Config): DataFrame = {
+  def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
     // undirected distinct neighbor relation, prepared by src (hash + sort
     // + AQE-off checkpoint — PropertyGraph.pregelEdges): both per-round
     // chains (gather, conflict validation) START with a join on src, so
@@ -36,13 +33,13 @@ object K1Coloring {
         withWeight = false)
       .where(col("src") =!= col("dst"))
 
-    var colors = graph.nodes.select(col("id"), lit(0L).as("color"),
-      lit(true).as("queued")).cutLineage()
+    import Pregel._
+    // a queued node is both ACTIVE and CHANGED: the loop ends once none is
+    val initial = graph.nodes.select(col("id"), lit(0L).as("color"),
+      lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
 
-    var iter = 0
-    var queued = 1L
-    while (queued > 0 && iter < config.maxIterations) {
-      val tRound = System.nanoTime()
+    val result = Pregel.iterate(initial, eu,
+        PregelConfig(maxIterations = config.maxIterations)) { (colors, last) =>
       // Queued nodes gather their SETTLED neighbors' colors as the
       // forbidden set, then take the rank-th free color, where rank =
       // this node's position among its QUEUED neighbors ordered by
@@ -55,12 +52,12 @@ object K1Coloring {
       // in a single round (a Jones-Plassmann-style multi-color step); any
       // residual cross-neighborhood collision is caught by the validation
       // pass, which is what guarantees a proper coloring in either scheme.
-      def h(c: Column) = xxhash64(c, lit(iter))
+      def h(c: Column) = xxhash64(c, lit(last.superstep))
       val nbrColors = eu
-        .join(colors.select(col("id").as("src"), col("queued").as("qs")), Seq("src"))
+        .join(colors.select(col("id").as("src"), col(ACTIVE).as("qs")), Seq("src"))
         .where(col("qs"))
         .join(colors.select(col("id").as("dst"), col("color").as("nc"),
-          col("queued").as("qd")), Seq("dst"))
+          col(ACTIVE).as("qd")), Seq("dst"))
         .groupBy(col("src"))
         .agg(
           // forbidden = SETTLED neighbor colors only (queued neighbors'
@@ -79,7 +76,7 @@ object K1Coloring {
 
       val recolored = colors.join(nbrColors, Seq("id"), "left_outer")
         .select(col("id"),
-          when(col("queued") && col("newColor").isNotNull, col("newColor"))
+          when(col(ACTIVE) && col("newColor").isNotNull, col("newColor"))
             .otherwise(col("color")).as("color"))
 
       // validation: for every conflicting edge, requeue the larger id.
@@ -89,25 +86,14 @@ object K1Coloring {
         .where(col("ca") === col("cb"))
         .select(greatest(col("src"), col("dst")).as("id")).distinct()
 
-      // the queued count rides the cutLineage materialization via
-      // observe() — one Spark action per round, not two (the separate
-      // count() was ~half the per-round latency at gate scale).
-      val obs = org.apache.spark.sql.Observation()
-      val next = recolored
+      val queued = coalesce(col("q"), lit(false))
+      StepPlan(recolored
         .join(conflicts.withColumn("q", lit(true)), Seq("id"), "left_outer")
-        .select(col("id"), col("color"), coalesce(col("q"), lit(false)).as("queued"))
-        .observe(obs, sum(col("queued").cast("long")).as("q"))
-        .cutLineage()
-      Lineage.release(colors)
-      colors = next
-
-      queued = Option(obs.get("q")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      iter += 1
-      System.err.println(f"[k1coloring] round $iter: " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2fs queued=$queued")
+        .select(col("id"), col("color"), queued.as(ACTIVE), queued.as(CHANGED),
+          lit(0.0).as(DELTA)))
     }
-    // colors is checkpointed, so the prepared edge frame's blocks can go.
+    // the result is checkpointed, so the prepared edge frame's blocks can go.
     Lineage.release(eu)
-    colors.select(col("id"), col("color"))
+    result.vertices.select(col("id"), col("color"))
   }
 }

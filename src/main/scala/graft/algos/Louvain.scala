@@ -52,10 +52,7 @@ object ModularityOptimization {
   private def symEdges(graph: PropertyGraph): DataFrame =
     graph.aggregated(Orientation.Undirected, Aggregation.Sum)
 
-  def run(graph: PropertyGraph, config: Config = Config()): Result =
-    runImpl(graph, config)
-
-  private def runImpl(graph: PropertyGraph, config: Config): Result = {
+  def run(graph: PropertyGraph, config: Config = Config()): Result = {
     val ew = symEdges(graph).cutLineage()
     val m2 = ew.agg(sum("weight")).head().getDouble(0) // = 2m (each edge twice)
     if (m2 == 0.0) {

@@ -35,19 +35,13 @@ object RandomWalk {
       orientation: Orientation = Orientation.Natural)
 
   /** @return (walkId, start, path: array<long>) */
-  def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)
-
-  private def runImpl(graph: PropertyGraph, config: Config): DataFrame = {
+  def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
     // adjacency prepared by id (hash + sort + AQE-off checkpoint): every
     // step joins walks⋈adj on the node id, so only the walk-state side
     // shuffles/sorts per step (see PropertyGraph.pregelEdges for why the
     // checkpoint must materialize with AQE off).
-    val adj = Lineage.withFastIteration(graph.spark, enabled = true) {
-      graph.adjacency(config.orientation)
-        .repartition(col("id")).sortWithinPartitions("id")
-        .localCheckpoint(true)
-    }
+    val adj = Lineage.sortedCheckpoint(
+      graph.adjacency(config.orientation).repartition(col("id")), "id")
     val biased = config.returnParam != 1.0 || config.inOutParam != 1.0
 
     var walks = graph.nodes.select(col("id").as("start"))

@@ -46,12 +46,7 @@ object Scc {
 
   /** @return (id, component) — component = max id in the SCC */
   def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)._1
-
-  /** run + outer-round count (coloring rounds, excluding trim peels) —
-   *  the bound the DAG-chain regression test pins. */
-  def runWithStats(graph: PropertyGraph, config: Config = Config()): (DataFrame, Int) =
-    runImpl(graph, config)
+    runWithStats(graph, config)._1
 
   /** Row gate for broadcasting node-sized frames into the edge-frame
    *  joins. Inside the AQE-off fast-iteration scope, checkpointed frames
@@ -63,7 +58,9 @@ object Scc {
    *  only correct choice there. */
   private val BroadcastMaxRows = 4L * 1000 * 1000
 
-  private def runImpl(graph: PropertyGraph, config: Config): (DataFrame, Int) = {
+  /** run + outer-round count (coloring rounds, excluding trim peels) —
+   *  the bound the DAG-chain regression test pins. */
+  def runWithStats(graph: PropertyGraph, config: Config = Config()): (DataFrame, Int) = {
     def gate(df: DataFrame, rows: Long): DataFrame =
       if (rows <= BroadcastMaxRows) broadcast(df) else df
     val fwd = graph.edges.select(col("src"), col("dst")).distinct()
@@ -104,8 +101,7 @@ object Scc {
     var lastCpu = cpuNow()
     def logPhase(phase: String, startNs: Long, detail: String): Unit = {
       val c = cpuNow()
-      // scalastyle:off println — same operator-diagnostic channel as [modopt]
-      println(f"[scc] outer=$outer $phase ${(System.nanoTime - startNs) / 1e9}%.1fs " +
+      System.err.println(f"[scc] outer=$outer $phase ${(System.nanoTime - startNs) / 1e9}%.1fs " +
         f"cpu=${(c - lastCpu) / 1e9}%.1fs $detail")
       lastCpu = c
     }
@@ -143,13 +139,8 @@ object Scc {
         // Prepared layout (hash(src) + sorted, AQE-off checkpoint — see
         // PropertyGraph.pregelEdges): the fixpoint joins on src every
         // iteration, so neither exchange nor sort recurs on the edge side.
-        val spark = graph.nodes.sparkSession
         val subStart = System.nanoTime
-        val sub = Lineage.withFastIteration(spark, enabled = true) {
-          induced(fwd)
-            .repartition(col("src")).sortWithinPartitions("src")
-            .localCheckpoint(true)
-        }
+        val sub = Lineage.sortedCheckpoint(induced(fwd).repartition(col("src")), "src")
 
         // Frontier-gated scatter: max-propagation is monotone, so a vertex
         // whose color did not improve this round has nothing new to tell
@@ -157,34 +148,28 @@ object Scc {
         // ACTIVE gating Pregel gives WCC). Without it every round re-sends
         // ALL colors over ALL edges: O(E·rounds) instead of O(Σ frontier
         // out-degree), the dominant term of the old 300 CPU-s bench cost.
-        // The round count (= changed count) rides the materializing action
-        // via observe(), so each round is ONE Spark job.
         logPhase("sub-layout", subStart, "")
         val colorStart = System.nanoTime
-        var colorRounds = 0
+        import Pregel.{ACTIVE, CHANGED, DELTA}
         val ownColor = struct(xxhash64(col("id")).as("prio"), col("id").as("cid"))
-        var colors = unassigned.select(col("id"), ownColor.as("color"),
-          lit(true).as("active")).cutLineage()
-        var changed = remaining // round 1: every vertex is active
-        while (changed > 0) {
-          colorRounds += 1
+        val coloring = Pregel.iterate(
+          unassigned.select(col("id"), ownColor.as("color"), lit(true).as(ACTIVE),
+            lit(true).as(CHANGED), lit(0.0).as(DELTA)),
+          sub, PregelConfig(maxIterations = Int.MaxValue)) { (colors, last) =>
           val better = sub
-            .join(gate(colors.where(col("active"))
-              .select(col("id").as("src"), col("color")), changed), Seq("src"))
+            .join(gate(colors.where(col(ACTIVE))
+              .select(col("id").as("src"), col("color")), last.activeVertices), Seq("src"))
             .groupBy(col("dst").as("id")).agg(max("color").as("nc"))
-          val obs = org.apache.spark.sql.Observation()
-          val next = colors.drop("active").join(better, Seq("id"), "left_outer")
+          val improved = coalesce(col("nc"), col("color")) > col("color")
+          StepPlan(colors.select(col("id"), col("color"))
+            .join(better, Seq("id"), "left_outer")
             .select(col("id"),
               greatest(col("color"), coalesce(col("nc"), col("color"))).as("color"),
-              (coalesce(col("nc"), col("color")) > col("color")).as("active"))
-            .observe(obs, sum(col("active").cast("long")).as("changed"))
-            .cutLineage()
-          changed = Option(obs.get("changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          Lineage.release(colors)
-          colors = next
+              improved.as(ACTIVE), improved.as(CHANGED), lit(0.0).as(DELTA)))
         }
+        val colors = coloring.vertices
 
-        logPhase("color", colorStart, s"rounds=$colorRounds")
+        logPhase("color", colorStart, s"rounds=${coloring.supersteps}")
 
         // phase 2: backward reachability of each color root within its
         // class. Restrict the reversed subgraph to SAME-COLOR endpoints
@@ -193,19 +178,16 @@ object Scc {
         // frontier: total edge traffic is one pass over the intra-class
         // edges instead of O(members·rounds) re-expansion.
         val subCStart = System.nanoTime
-        val subC = Lineage.withFastIteration(spark, enabled = true) {
-          sub
-            .join(gate(colors.select(col("id").as("src"), col("color").as("cs")),
-              remaining), Seq("src"))
-            .join(gate(colors.select(col("id").as("dst"), col("color").as("cd")),
-              remaining), Seq("dst"))
-            .where(col("cs") === col("cd"))
-            // reversed: phase 2 walks edges backward, and this loop also
-            // joins on its (reversed) src every iteration
-            .select(col("dst").as("src"), col("src").as("dst"))
-            .repartition(col("src")).sortWithinPartitions("src")
-            .localCheckpoint(true)
-        }
+        val subC = Lineage.sortedCheckpoint(sub
+          .join(gate(colors.select(col("id").as("src"), col("color").as("cs")),
+            remaining), Seq("src"))
+          .join(gate(colors.select(col("id").as("dst"), col("color").as("cd")),
+            remaining), Seq("dst"))
+          .where(col("cs") === col("cd"))
+          // reversed: phase 2 walks edges backward, and this loop also
+          // joins on its (reversed) src every iteration
+          .select(col("dst").as("src"), col("src").as("dst"))
+          .repartition(col("src")), "src")
         logPhase("subC-layout", subCStart, "")
         val bwdStart = System.nanoTime
         var bwdRounds = 0

@@ -60,10 +60,7 @@ object ShortestPaths {
       target: Option[Long] = None,
       heuristic: Option[DataFrame] = None,
       maxIterations: Int = 100): DataFrame = {
-    val edgesPart = Lineage.withFastIteration(nodes.sparkSession, enabled = true) {
-      edges.repartition(col("src")).sortWithinPartitions("src")
-        .localCheckpoint(true)
-    }
+    val edgesPart = Lineage.sortedCheckpoint(edges.repartition(col("src")), "src")
     val big = edgesPart.count() >= Lineage.aqeOffMinEdges(nodes.sparkSession)
     relaxCore(Ctx(edgesPart, nodes, big), Set.empty, Set.empty,
       source, target, heuristic, maxIterations)

@@ -29,10 +29,8 @@ object SpanningTree {
   /** @return tree edges (src, dst, weight) with src<dst — one minimum
    *  spanning tree per connected component (a forest on disconnected
    *  graphs, like running Prim from every component). */
-  def minimumSpanningForest(graph: PropertyGraph): DataFrame =
-    forestImpl(graph)
-
-  private def forestImpl(graph: PropertyGraph): DataFrame = {
+  def minimumSpanningForest(graph: PropertyGraph): DataFrame = {
+    import Pregel._
     val canon = canonical(graph).cutLineage()
     var comp = graph.nodes.select(col("id"), col("id").as("comp")).cutLineage()
     var tree = canon.limit(0).cutLineage()
@@ -55,7 +53,9 @@ object SpanningTree {
           .select(col("e.a").as("a"), col("e.b").as("b"), col("e.weight").as("weight"))
           .distinct()
           .cutLineage()
-        tree = tree.unionByName(perComp).cutLineage()
+        val treeNext = tree.unionByName(perComp).cutLineage()
+        Lineage.release(tree)
+        tree = treeNext
 
         // merge chosen components: min-label propagation with pointer
         // jumping over the (tiny: one edge per component) merge graph.
@@ -63,33 +63,38 @@ object SpanningTree {
           .join(comp.select(col("id").as("a"), col("comp").as("ca")), Seq("a"))
           .join(comp.select(col("id").as("b"), col("comp").as("cb")), Seq("b"))
           .select(col("ca"), col("cb")).cutLineage()
-        var label = merges.select(col("ca").as("c"))
+        val sym = merges.select(col("ca").as("x"), col("cb").as("y"))
+          .unionByName(merges.select(col("cb").as("x"), col("ca").as("y")))
+        val initial = merges.select(col("ca").as("c"))
           .unionByName(merges.select(col("cb").as("c"))).distinct()
-          .select(col("c"), col("c").as("l")).cutLineage()
-        var changed = 1L
-        while (changed > 0) {
-          val sym = merges.select(col("ca").as("x"), col("cb").as("y"))
-            .unionByName(merges.select(col("cb").as("x"), col("ca").as("y")))
+          .select(col("c"), col("c").as("l"), lit(true).as(ACTIVE),
+            lit(true).as(CHANGED), lit(0.0).as(DELTA))
+        val labels = Pregel.iterate(initial, merges,
+            PregelConfig(maxIterations = Int.MaxValue)) { (label, _) =>
           val better = sym.join(label.select(col("c").as("y"), col("l")), Seq("y"))
             .groupBy(col("x").as("c")).agg(min("l").as("nl"))
           val hooked = label.join(better, Seq("c"), "left_outer")
-            .select(col("c"), least(col("l"), coalesce(col("nl"), col("l"))).as("l"))
+            .select(col("c"), col("l").as("ol"),
+              least(col("l"), coalesce(col("nl"), col("l"))).as("l"))
           // pointer jump: l := l(l) halves chain depth per round.
-          val next = hooked.as("t")
+          val jumped = least(col("t.l"), coalesce(col("jl"), col("t.l")))
+          StepPlan(hooked.as("t")
             .join(hooked.select(col("c").as("jc"), col("l").as("jl")).as("p"),
               col("t.l") === col("jc"), "left_outer")
-            .select(col("t.c").as("c"),
-              least(col("t.l"), coalesce(col("jl"), col("t.l"))).as("l"))
-            .cutLineage()
-          changed = next.as("n").join(label.select(col("c"), col("l").as("ol")), Seq("c"))
-            .where(col("l") =!= col("ol")).count()
-          label = next
-        }
-        comp = comp.join(label.select(col("c").as("comp"), col("l")), Seq("comp"), "left_outer")
+            .select(col("t.c").as("c"), jumped.as("l"), lit(true).as(ACTIVE),
+              (jumped =!= col("t.ol")).as(CHANGED), lit(0.0).as(DELTA)))
+        }.vertices
+        val compNext = comp
+          .join(labels.select(col("c").as("comp"), col("l")), Seq("comp"), "left_outer")
           .select(col("id"), coalesce(col("l"), col("comp")).as("comp"))
           .cutLineage()
+        Seq(comp, perComp, merges, labels).foreach(Lineage.release)
+        comp = compNext
       }
+      Lineage.release(e)
     }
+    Lineage.release(comp)
+    Lineage.release(canon)
     tree.select(col("a").as("src"), col("b").as("dst"), col("weight"))
   }
 

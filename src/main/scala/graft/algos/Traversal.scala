@@ -203,32 +203,29 @@ object Traversal {
         .select(col("s").as("source"), col("v").as("target"),
           col("d").cast("double").as("distance"))
     } else {
+      import Pregel._
       val edges = graph.pregelEdges(orientation, Aggregation.Min)
-      // batched Bellman-Ford on (s, v) pairs
-      var state = srcs.select(col("id").as("s"), col("id").as("v"), lit(0.0).as("d"))
-        .withColumn("updated", lit(true)).cutLineage()
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIterations) {
+      // batched Bellman-Ford on (s, v) pairs; a pair whose distance
+      // improved is the only one that relaxes its out-edges next round
+      val initial = srcs.select(col("id").as("s"), col("id").as("v"), lit(0.0).as("d"),
+        lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
+      val result = Pregel.iterate(initial, edges,
+          PregelConfig(maxIterations = maxIterations)) { (state, _) =>
         val msgs = edges
-          .join(state.where(col("updated"))
+          .join(state.where(col(ACTIVE))
             .select(col("v").as("src"), col("s"), col("d").as("sd")), Seq("src"))
           .groupBy(col("s"), col("dst").as("v"))
           .agg(min(col("sd") + col("weight")).as("nd"))
-        val next = state.join(msgs, Seq("s", "v"), "full_outer")
+        val updated = coalesce(col("nd"), lit(Double.PositiveInfinity)) <
+          coalesce(col("d"), lit(Double.PositiveInfinity))
+        StepPlan(state.join(msgs, Seq("s", "v"), "full_outer")
           .select(col("s"), col("v"),
             least(coalesce(col("d"), lit(Double.PositiveInfinity)),
               coalesce(col("nd"), lit(Double.PositiveInfinity))).as("d"),
-            (coalesce(col("nd"), lit(Double.PositiveInfinity)) <
-              coalesce(col("d"), lit(Double.PositiveInfinity))).as("updated"))
-          .cutLineage()
-        Lineage.release(state)
-        state = next
-        changed = state.where(col("updated")).count()
-        iter += 1
+            updated.as(ACTIVE), updated.as(CHANGED), lit(0.0).as(DELTA)))
       }
       Lineage.release(edges)
-      state.select(col("s").as("source"), col("v").as("target"),
+      result.vertices.select(col("s").as("source"), col("v").as("target"),
         col("d").as("distance"))
     }
   }

@@ -107,7 +107,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
    * edges⋈frontier sort-merge join then needs neither an exchange nor a
    * sort on the (large, static) edge side.
    *
-   * This is the only edge frame [[graft.core.Pregel.run]] accepts; Pregel
+   * This is the only edge frame [[graft.core.Pregel.run]] accepts; Pregel.run
    * releases the checkpoint blocks when the loop ends, so don't reuse the
    * frame after the run.
    *
@@ -127,16 +127,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
       case (a, true) => shuffled.groupBy(col("src"), col("dst"))
         .agg(a.agg(col("weight")).cast("double").as("weight"))
     }
-    // The eager materialization MUST run with AQE disabled: an eager
-    // localCheckpoint under AQE snapshots the partitioning of the
-    // not-yet-finalized adaptive plan — UnknownPartitioning — and the
-    // whole point of this layout (exchange-free, sort-free superstep
-    // joins) is silently lost. Measured: with AQE on at checkpoint time
-    // the captured partitioning is UnknownPartitioning(0); with it off,
-    // hashpartitioning(src) + [src ASC, dst ASC] both survive.
-    Lineage.withFastIteration(spark, enabled = true) {
-      flat.sortWithinPartitions("src", "dst").localCheckpoint(true)
-    }
+    Lineage.sortedCheckpoint(flat, "src", "dst")
   }
 
   /** (id, degree) under an orientation; vertices with no edges get 0.

@@ -33,8 +33,9 @@ object Lineage {
    * AQE — its runtime broadcast conversion and partition coalescing are a
    * measured 2-3× win there (bench r2: louvain 17→58 s, scc 12→32 s when
    * AQE was blanket-disabled), while big superstep frames measure the
-   * opposite (re-planning latency, nothing to broadcast). Callers gate on
-   * the edge-frame row count (see Pregel.run).
+   * opposite (re-planning latency, nothing to broadcast). Loops gate on
+   * the edge-frame row count: [[Pregel.iterate]] does it for every loop
+   * that runs on it.
    *
    * CONCURRENCY CONTRACT (ADVICE r2): the toggle mutates the session conf
    * for the loop's duration, so algorithm runs assume a single-threaded
@@ -57,6 +58,21 @@ object Lineage {
       try body finally spark.conf.set(key, prev)
     }
   }
+
+  /**
+   * Sort `df` within its partitions and eagerly localCheckpoint it: the
+   * static side of a loop's per-round join then needs neither an exchange
+   * nor a sort. The materialization MUST run with AQE disabled: an eager
+   * localCheckpoint under AQE snapshots the partitioning of the
+   * not-yet-finalized adaptive plan — UnknownPartitioning — and the
+   * layout is silently lost. Measured: with AQE on at checkpoint time the
+   * captured partitioning is UnknownPartitioning(0); with it off,
+   * hashpartitioning(src) + [src ASC, dst ASC] both survive.
+   */
+  def sortedCheckpoint(df: DataFrame, sortKeys: String*): DataFrame =
+    withFastIteration(df.sparkSession, enabled = true) {
+      df.sortWithinPartitions(sortKeys.head, sortKeys.tail: _*).localCheckpoint(true)
+    }
 
   /** Edge-count threshold above which an iterative loop turns AQE off
    *  (override with spark conf `graft.aqeOff.minEdges`). */

@@ -51,11 +51,32 @@ final case class SuperstepMetrics(
       s""""skewRatio":$skewRatio,"wallMillis":$wallMillis}"""
 }
 
+object SuperstepMetrics {
+  /** Inverse of `toJson`: a resumed loop's previous-superstep record. */
+  def fromJson(json: String): SuperstepMetrics = {
+    val f = "\"(\\w+)\":([^,}]+)".r.findAllMatchIn(json)
+      .map(m => m.group(1) -> m.group(2)).toMap
+    SuperstepMetrics(f("superstep").toInt, f("activeVertices").toLong,
+      f("messages").toLong, f("deltaNorm").toDouble, f("skewRatio").toDouble,
+      f("wallMillis").toLong)
+  }
+}
+
 final case class PregelResult(
     vertices: DataFrame,
     supersteps: Int,
     converged: Boolean,
     metrics: Seq[SuperstepMetrics])
+
+/** What one superstep hands [[Pregel.iterate]]: the plan of the next state
+ *  (its columns include the ACTIVE / CHANGED / DELTA markers), the
+ *  combined-message count and skew ratio when the step measured them, and
+ *  a release hook for the step's own intermediates, run after the barrier. */
+final case class StepPlan(
+    next: DataFrame,
+    messages: Long = -1L,
+    skewRatio: Double = 1.0,
+    cleanup: () => Unit = () => ())
 
 /** Thrown by the `stopAfter` test hook to simulate a mid-run crash. */
 final class PregelKilledException(val superstep: Int)
@@ -92,7 +113,101 @@ object Pregel {
   val MSG     = "_msg"      // combined inbound message column (visible to update exprs)
 
   /**
-   * Run the superstep loop.
+   * The superstep loop every fixpoint here runs on. `step` maps the
+   * current state and the previous superstep's record (superstep 0's
+   * describes `initial`) to the next state's plan; `iterate` owns the rest:
+   *
+   *  - the barrier (see `barrier`) — one Spark action per superstep;
+   *  - release of the superseded state's blocks;
+   *  - the metrics history, durable checkpoints, resume and `stopAfter`;
+   *  - AQE gating on the size of `scatterEdges`, which it does not release;
+   *  - stopping after `maxIterations`, or once no row is CHANGED.
+   *
+   * The state's columns are the step's business, except for the ACTIVE,
+   * CHANGED and DELTA markers, which `initial` and every plan carry.
+   */
+  def iterate(initial: DataFrame, scatterEdges: DataFrame, config: PregelConfig)(
+      step: (DataFrame, SuperstepMetrics) => StepPlan): PregelResult = {
+    val spark = initial.sparkSession
+    val ckpt = config.checkpointDir.map(new CheckpointManager(_))
+
+    // AQE off only when the superstep frame is big enough that broadcast
+    // conversion can't apply and re-planning latency dominates (measured
+    // both ways — see Lineage.withFastIteration scaladoc). The count scans
+    // the checkpointed edge blocks, not the source.
+    val bigWork = scatterEdges.count() >= Lineage.aqeOffMinEdges(spark)
+    Lineage.withFastIteration(spark, bigWork) {
+
+    val t0 = System.currentTimeMillis()
+    var (state, last) = ckpt.flatMap(_.latestSuperstep) match {
+      case Some(k) => (ckpt.get.load(spark, k), ckpt.get.metrics(k)) // resume path
+      case None => // cut the ingest lineage once
+        val (cut, _, active, delta) = barrier(initial)
+        (cut, SuperstepMetrics(0, active, -1L, delta, 1.0, System.currentTimeMillis() - t0))
+    }
+    var converged = false
+    val history = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
+
+    while (!converged && last.superstep < config.maxIterations) {
+      val t0 = System.currentTimeMillis()
+      val plan = step(state, last)
+      val (next, changed, active, delta) = barrier(plan.next)
+      plan.cleanup()
+      // release the superseded superstep's checkpoint blocks NOW — waiting
+      // for GC-driven ContextCleaner cleanup lets blocks pile up one set
+      // per superstep (observed: heap thrash + executor heartbeat loss on
+      // a 46 M-edge run).
+      Lineage.release(state)
+      state = next
+      last = SuperstepMetrics(last.superstep + 1, active, plan.messages, delta,
+        plan.skewRatio, System.currentTimeMillis() - t0)
+      history += last
+
+      converged = changed == 0
+      ckpt.foreach { c =>
+        if (last.superstep % config.checkpointEvery == 0 || converged) {
+          // durable checkpoint: parquet round-trip cuts lineage AND is the
+          // exact state a resumed run would start from.
+          val reread = c.save(state, last.superstep, last)
+          Lineage.release(state)
+          state = reread.persist(StorageLevel.MEMORY_AND_DISK)
+        }
+      }
+      config.stopAfter.filter(_ == last.superstep).foreach { k =>
+        throw new PregelKilledException(k)
+      }
+    }
+
+    PregelResult(state, last.superstep, converged, history.toSeq)
+    } // withFastIteration
+  }
+
+  /**
+   * The superstep barrier: the eager localCheckpoint materializes the new
+   * state and cuts its lineage (iterative plans would otherwise snowball —
+   * SURVEY.md §7.4). Convergence stats ride the SAME materializing action
+   * via observe() (CollectMetrics accumulators) — a superstep is ONE Spark
+   * action, not a checkpoint action plus a stats aggregate; the removed
+   * per-superstep scheduling round was a measured term of the scaling
+   * floor (VERDICT r1 per-superstep overhead note).
+   *
+   * @return (cut state, CHANGED rows, ACTIVE rows, max |DELTA|)
+   */
+  private def barrier(plan: DataFrame): (DataFrame, Long, Long, Double) = {
+    val obs = org.apache.spark.sql.Observation()
+    val cut = plan
+      .observe(obs,
+        sum(col(CHANGED).cast("long")).as("changed"),
+        sum(col(ACTIVE).cast("long")).as("active"),
+        coalesce(max(abs(col(DELTA))), lit(0.0)).as("deltaNorm"))
+      .cutLineage()
+    val stats = obs.get
+    def count(k: String) = Option(stats(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    (cut, count("changed"), count("active"), stats("deltaNorm").asInstanceOf[Double])
+  }
+
+  /**
+   * Vertex-centric supersteps on [[iterate]]: scatter, combine, update.
    *
    * @param initial   vertex frame: `id: long`, state columns, plus ACTIVE /
    *                  CHANGED / DELTA markers (init step = reference
@@ -118,94 +233,25 @@ object Pregel {
       combine: DataFrame => DataFrame,
       updateExprs: Seq[Column],
       config: PregelConfig = PregelConfig()): PregelResult = {
-
-    val spark = initial.sparkSession
-    val ckpt = config.checkpointDir.map(new CheckpointManager(_))
-
-    // AQE off only when the superstep frame is big enough that broadcast
-    // conversion can't apply and re-planning latency dominates (measured
-    // both ways — see Lineage.withFastIteration scaladoc). The count scans
-    // the checkpointed edge blocks, not the source.
-    val bigWork = edges.count() >= Lineage.aqeOffMinEdges(spark)
-    Lineage.withFastIteration(spark, bigWork) {
-
-    var superstep = ckpt.flatMap(_.latestSuperstep).getOrElse(0)
-    var state =
-      if (superstep > 0) ckpt.get.load(spark, superstep) // resume path
-      else initial.cutLineage() // cut the ingest lineage once
-
-    var converged = false
-    val history = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
-
-    while (!converged && superstep < config.maxIterations) {
-      val t0 = System.currentTimeMillis()
-
+    // metrics cost one extra pass over the (small, pre-combined) message
+    // frame; skip it entirely when nobody will read the lineage.
+    val track = config.trackMetrics || config.checkpointDir.isDefined
+    val result = iterate(initial, edges, config) { (state, _) =>
       // scatter: active sources emit along their out-edges, then combine.
       val active = state.where(col(ACTIVE))
       val raw = edges.join(active, edges("src") === active("id"))
         .select(edges("dst").as("id"), msgExpr.as(MSG))
-      val track = config.trackMetrics || ckpt.isDefined
-      // metrics cost one extra pass over the (small, pre-combined) message
-      // frame; skip it entirely when nobody will read the lineage.
-      val msgs =
-        if (track) combine(raw).persist(StorageLevel.MEMORY_AND_DISK)
-        else combine(raw)
-      val msgCount = if (track) msgs.count() else -1L
-
-      // gather/apply: old state LEFT JOIN messages → new state. The eager
-      // localCheckpoint is both the superstep barrier and the lineage cut
-      // (iterative plans would otherwise snowball — SURVEY.md §7.4).
-      // Convergence stats ride the SAME materializing action via observe()
-      // (CollectMetrics accumulators) — a superstep is ONE Spark action,
-      // not a checkpoint action plus a stats aggregate; the removed
-      // per-superstep scheduling round was a measured term of the scaling
-      // floor (VERDICT r1 per-superstep overhead note).
-      val joined = state.join(msgs, Seq("id"), "left_outer")
-      val obs = org.apache.spark.sql.Observation()
-      val newState = joined.select(col("id") +: updateExprs: _*)
-        .observe(obs,
-          sum(col(CHANGED).cast("long")).as("changed"),
-          sum(col(ACTIVE).cast("long")).as("active"),
-          coalesce(max(abs(col(DELTA))), lit(0.0)).as("deltaNorm"))
-        .cutLineage()
-
-      val statsMap = obs.get
-      val changed = Option(statsMap("changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val activeCount = Option(statsMap("active")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val deltaNorm = statsMap("deltaNorm").asInstanceOf[Double]
-
-      val skew = if (track) skewRatio(msgs) else 1.0
-      if (track) msgs.unpersist()
-      // release the superseded superstep's checkpoint blocks NOW — waiting
-      // for GC-driven ContextCleaner cleanup lets blocks pile up one set
-      // per superstep (observed: heap thrash + executor heartbeat loss on
-      // a 46 M-edge run).
-      Lineage.release(state)
-      state = newState
-      superstep += 1
-
-      val m = SuperstepMetrics(superstep, activeCount, msgCount, deltaNorm, skew,
-        System.currentTimeMillis() - t0)
-      history += m
-
-      converged = changed == 0
-      ckpt.foreach { c =>
-        if (superstep % config.checkpointEvery == 0 || converged) {
-          // durable checkpoint: parquet round-trip cuts lineage AND is the
-          // exact state a resumed run would start from.
-          val reread = c.save(state, superstep, m)
-          Lineage.release(state)
-          state = reread.persist(StorageLevel.MEMORY_AND_DISK)
-        }
-      }
-      config.stopAfter.filter(_ == superstep).foreach { k =>
-        throw new PregelKilledException(k)
+      // gather/apply: old state LEFT JOIN messages → new state
+      def update(msgs: DataFrame) = state.join(msgs, Seq("id"), "left_outer")
+        .select(col("id") +: updateExprs: _*)
+      if (!track) StepPlan(update(combine(raw)))
+      else {
+        val msgs = combine(raw).persist(StorageLevel.MEMORY_AND_DISK)
+        StepPlan(update(msgs), msgs.count(), skewRatio(msgs), () => msgs.unpersist())
       }
     }
-
     Lineage.release(edges)
-    PregelResult(state, superstep, converged, history.toSeq)
-    } // withFastIteration
+    result
   }
 
   /** max/mean rows per partition of the combined-message frame — the skew
@@ -252,7 +298,7 @@ object Combiners {
  *   <dir>/lineage.jsonl          append-only, one line per superstep
  *
  * Resume = load the highest superstep whose parquet write completed, then
- * continue the loop; Pregel.run does this automatically when the dir is
+ * continue the loop; Pregel.iterate does this automatically when the dir is
  * non-empty.
  */
 final class CheckpointManager(dir: String) {
@@ -263,14 +309,20 @@ final class CheckpointManager(dir: String) {
 
   def save(state: DataFrame, k: Int, m: SuperstepMetrics): DataFrame = {
     val path = statePath(k)
+    // the record goes first: every committed (_SUCCESS) state has one
+    Files.createDirectories(root.resolve(s"superstep=$k"))
+    Files.writeString(metricsPath(k), m.toJson)
     state.write.mode("overwrite").parquet(path)
-    Files.writeString(root.resolve(s"superstep=$k").resolve("metrics.json"), m.toJson)
     Files.writeString(root.resolve("lineage.jsonl"), m.toJson + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     state.sparkSession.read.parquet(path)
   }
 
+  private def metricsPath(k: Int) = root.resolve(s"superstep=$k").resolve("metrics.json")
+
   def load(spark: SparkSession, k: Int): DataFrame = spark.read.parquet(statePath(k))
+
+  def metrics(k: Int): SuperstepMetrics = SuperstepMetrics.fromJson(Files.readString(metricsPath(k)))
 
   /** Highest superstep with a completed (_SUCCESS) state write. */
   def latestSuperstep: Option[Int] = {

@@ -42,10 +42,7 @@ object FastRP {
       orientation: Orientation = Orientation.Undirected)
 
   /** @return (id, embedding: array<double>) */
-  def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
-    runImpl(graph, config)
-
-  private def runImpl(graph: PropertyGraph, config: Config): DataFrame = {
+  def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
     val dim = config.embeddingSize
     val vcols = (0 until dim).map(j => s"v$j")
     // prepared layout: the 3 propagation iterations join on src against

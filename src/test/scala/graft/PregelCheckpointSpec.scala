@@ -3,6 +3,7 @@ package graft
 import graft.algos.{LabelPropagation, PageRank, Wcc}
 import graft.core._
 import java.nio.file.Files
+import org.apache.spark.sql.functions._
 
 /**
  * Checkpoint / lineage / resume (north rule: every superstep writes
@@ -87,5 +88,57 @@ class PregelCheckpointSpec extends SparkSpec {
     val ckpt = new CheckpointManager(dir)
     assert(ckpt.lineage.size == 5)
     assert(ckpt.lineage.head.contains("\"superstep\":1"))
+  }
+
+  /** Toy fixpoint on [[Pregel.iterate]]: three counters step 0, 1, 2, …;
+   *  a row stops changing once it reaches 5. `seen` records the
+   *  previous-superstep record each step was handed. */
+  def counter(config: PregelConfig,
+      seen: collection.mutable.Buffer[SuperstepMetrics]): PregelResult = {
+    import Pregel._
+    val initial = spark.range(3).select(col("id"), lit(0L).as("n"),
+      lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
+    Pregel.iterate(initial, spark.range(1).toDF("src"), config) { (state, last) =>
+      seen += last
+      val n = col("n") + 1L
+      StepPlan(state.select(col("id"), n.as("n"), lit(true).as(ACTIVE),
+        (n < 5L).as(CHANGED), lit(1.0).as(DELTA)))
+    }
+  }
+
+  test("iterate: a counter converges after 5 supersteps and keeps only its final state") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val seen = collection.mutable.Buffer[SuperstepMetrics]()
+    val r = counter(PregelConfig(), seen)
+    assert(r.converged && r.supersteps == 5)
+    assert(r.metrics.map(_.superstep) == (1 to 5))
+    assert(r.metrics.forall(m => m.activeVertices == 3 && m.deltaNorm == 1.0))
+    // superstep 0's record describes the initial state
+    assert(seen.map(_.superstep) == (0 to 4))
+    assert(seen.head.activeVertices == 3)
+    assert(longs(r.vertices.select("id", "n")) == Map(0L -> 5L, 1L -> 5L, 2L -> 5L))
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1,
+      "every superseded state is released")
+  }
+
+  test("iterate: maxIterations = 3 stops unconverged after 3 supersteps") {
+    val r = counter(PregelConfig(maxIterations = 3), collection.mutable.Buffer())
+    assert(!r.converged && r.supersteps == 3 && r.metrics.size == 3)
+    assert(longs(r.vertices.select("id", "n")).values.toSet == Set(3L))
+  }
+
+  test("iterate: a resumed run hands its first step the checkpointed record") {
+    val dir = tmpDir("iterate-ckpt")
+    val killed = collection.mutable.Buffer[SuperstepMetrics]()
+    intercept[PregelKilledException] {
+      counter(PregelConfig(checkpointDir = Some(dir), stopAfter = Some(2)), killed)
+    }
+    val seen = collection.mutable.Buffer[SuperstepMetrics]()
+    val r = counter(PregelConfig(checkpointDir = Some(dir)), seen)
+    assert(r.converged && r.supersteps == 5 && r.metrics.size == 3)
+    val saved = new CheckpointManager(dir).metrics(2)
+    assert(saved.superstep == 2 && saved.activeVertices == 3)
+    assert(seen.head == saved)
   }
 }

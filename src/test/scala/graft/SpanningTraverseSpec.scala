@@ -101,6 +101,19 @@ class SpanningTraverseSpec extends SparkSpec {
     assert(clusters.values.toSet.size == 4)
   }
 
+  test("an MST run leaves no more persisted RDDs behind than a WCC run") {
+    val sc = spark.sparkContext
+    def newPersisted(run: => org.apache.spark.sql.DataFrame): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      run.count()
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    val wcc = newPersisted(Wcc.run(primGraph))
+    val mst = newPersisted(SpanningTree.minimumSpanningForest(primGraph))
+    // both keep only their result frame; every round's frames are released
+    assert(mst <= wcc, s"MST left $mst persisted RDDs, WCC $wcc")
+  }
+
   test("MST determinism across parallelism") {
     val a = SpanningTree.minimumSpanningForest(primGraph)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

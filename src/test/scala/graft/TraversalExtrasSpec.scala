@@ -59,6 +59,13 @@ class TraversalExtrasSpec extends SparkSpec {
     assert(comp == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
+  test("SCC keeps stdout clean: its phase diagnostics go to stderr") {
+    val g = graphOf(4, Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 3L)))
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out) { Scc.run(g).count() }
+    assert(out.size() == 0, s"stdout got: ${out.toString}")
+  }
+
   test("similarity kernels match hand values (Intersections.java:113-170)") {
     import spark.implicits._
     val df = Seq((Array(1.0, 0.0), Array(0.0, 1.0))).toDF("a", "b")
