@@ -89,7 +89,7 @@ object Eigenvector {
     val initial = graph.nodes.select(col("id"), lit(1.0 / n).as("rank"),
       lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
 
-    val result = Pregel.iterate(initial, edges,
+    val result = Pregel.iterate(initial, Some(edges),
         PregelConfig(maxIterations = config.maxIterations)) { (ranks, _) =>
       val sums = edges
         .join(ranks.select(col("id").as("src"), col("rank")), Seq("src"))

@@ -38,7 +38,7 @@ object K1Coloring {
     val initial = graph.nodes.select(col("id"), lit(0L).as("color"),
       lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
 
-    val result = Pregel.iterate(initial, eu,
+    val result = Pregel.iterate(initial, None,
         PregelConfig(maxIterations = config.maxIterations)) { (colors, last) =>
       // Queued nodes gather their SETTLED neighbors' colors as the
       // forbidden set, then take the rank-th free color, where rank =

@@ -155,7 +155,7 @@ object Scc {
         val coloring = Pregel.iterate(
           unassigned.select(col("id"), ownColor.as("color"), lit(true).as(ACTIVE),
             lit(true).as(CHANGED), lit(0.0).as(DELTA)),
-          sub, PregelConfig(maxIterations = Int.MaxValue)) { (colors, last) =>
+          None, PregelConfig(maxIterations = Int.MaxValue)) { (colors, last) =>
           val better = sub
             .join(gate(colors.where(col(ACTIVE))
               .select(col("id").as("src"), col("color")), last.activeVertices), Seq("src"))

@@ -69,7 +69,7 @@ object SpanningTree {
           .unionByName(merges.select(col("cb").as("c"))).distinct()
           .select(col("c"), col("c").as("l"), lit(true).as(ACTIVE),
             lit(true).as(CHANGED), lit(0.0).as(DELTA))
-        val labels = Pregel.iterate(initial, merges,
+        val labels = Pregel.iterate(initial, None,
             PregelConfig(maxIterations = Int.MaxValue)) { (label, _) =>
           val better = sym.join(label.select(col("c").as("y"), col("l")), Seq("y"))
             .groupBy(col("x").as("c")).agg(min("l").as("nl"))

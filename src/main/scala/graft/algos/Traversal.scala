@@ -209,7 +209,7 @@ object Traversal {
       // improved is the only one that relaxes its out-edges next round
       val initial = srcs.select(col("id").as("s"), col("id").as("v"), lit(0.0).as("d"),
         lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
-      val result = Pregel.iterate(initial, edges,
+      val result = Pregel.iterate(initial, None,
           PregelConfig(maxIterations = maxIterations)) { (state, _) =>
         val msgs = edges
           .join(state.where(col(ACTIVE))

@@ -34,8 +34,9 @@ object Lineage {
    * measured 2-3× win there (bench r2: louvain 17→58 s, scc 12→32 s when
    * AQE was blanket-disabled), while big superstep frames measure the
    * opposite (re-planning latency, nothing to broadcast). Loops gate on
-   * the edge-frame row count: [[Pregel.iterate]] does it for every loop
-   * that runs on it.
+   * the edge-frame row count: [[Pregel.iterate]] does it for the loops that
+   * hand it their edge frame (`Pregel.run`, eigenvector); its other loops
+   * keep AQE on.
    *
    * CONCURRENCY CONTRACT (ADVICE r2): the toggle mutates the session conf
    * for the loop's duration, so algorithm runs assume a single-threaded

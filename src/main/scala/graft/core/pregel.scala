@@ -51,17 +51,6 @@ final case class SuperstepMetrics(
       s""""skewRatio":$skewRatio,"wallMillis":$wallMillis}"""
 }
 
-object SuperstepMetrics {
-  /** Inverse of `toJson`: a resumed loop's previous-superstep record. */
-  def fromJson(json: String): SuperstepMetrics = {
-    val f = "\"(\\w+)\":([^,}]+)".r.findAllMatchIn(json)
-      .map(m => m.group(1) -> m.group(2)).toMap
-    SuperstepMetrics(f("superstep").toInt, f("activeVertices").toLong,
-      f("messages").toLong, f("deltaNorm").toDouble, f("skewRatio").toDouble,
-      f("wallMillis").toLong)
-  }
-}
-
 final case class PregelResult(
     vertices: DataFrame,
     supersteps: Int,
@@ -114,19 +103,23 @@ object Pregel {
 
   /**
    * The superstep loop every fixpoint here runs on. `step` maps the
-   * current state and the previous superstep's record (superstep 0's
-   * describes `initial`) to the next state's plan; `iterate` owns the rest:
+   * current state and the previous superstep's record to the next state's
+   * plan; `iterate` owns the rest:
    *
    *  - the barrier (see `barrier`) — one Spark action per superstep;
    *  - release of the superseded state's blocks;
    *  - the metrics history, durable checkpoints, resume and `stopAfter`;
-   *  - AQE gating on the size of `scatterEdges`, which it does not release;
+   *  - AQE gating on the size of `gateEdges`, which it does not release;
    *  - stopping after `maxIterations`, or once no row is CHANGED.
    *
    * The state's columns are the step's business, except for the ACTIVE,
    * CHANGED and DELTA markers, which `initial` and every plan carry.
+   *
+   * @param gateEdges the loop's static edge frame when its row count should
+   *                  decide AQE (see `Lineage.withFastIteration`); loops
+   *                  that pass `None` run under the session's AQE setting
    */
-  def iterate(initial: DataFrame, scatterEdges: DataFrame, config: PregelConfig)(
+  def iterate(initial: DataFrame, gateEdges: Option[DataFrame], config: PregelConfig)(
       step: (DataFrame, SuperstepMetrics) => StepPlan): PregelResult = {
     val spark = initial.sparkSession
     val ckpt = config.checkpointDir.map(new CheckpointManager(_))
@@ -135,16 +128,17 @@ object Pregel {
     // conversion can't apply and re-planning latency dominates (measured
     // both ways — see Lineage.withFastIteration scaladoc). The count scans
     // the checkpointed edge blocks, not the source.
-    val bigWork = scatterEdges.count() >= Lineage.aqeOffMinEdges(spark)
+    val bigWork = gateEdges.exists(_.count() >= Lineage.aqeOffMinEdges(spark))
     Lineage.withFastIteration(spark, bigWork) {
 
+    // start from the latest durable checkpoint, or from `initial`; either
+    // way one barrier cuts its lineage and observes superstep k's record.
     val t0 = System.currentTimeMillis()
-    var (state, last) = ckpt.flatMap(_.latestSuperstep) match {
-      case Some(k) => (ckpt.get.load(spark, k), ckpt.get.metrics(k)) // resume path
-      case None => // cut the ingest lineage once
-        val (cut, _, active, delta) = barrier(initial)
-        (cut, SuperstepMetrics(0, active, -1L, delta, 1.0, System.currentTimeMillis() - t0))
-    }
+    val k = ckpt.flatMap(_.latestSuperstep).getOrElse(0)
+    val (cut, _, active0, delta0) =
+      barrier(if (k > 0) ckpt.get.load(spark, k) else initial)
+    var state = cut
+    var last = SuperstepMetrics(k, active0, -1L, delta0, 1.0, System.currentTimeMillis() - t0)
     var converged = false
     val history = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
 
@@ -236,7 +230,7 @@ object Pregel {
     // metrics cost one extra pass over the (small, pre-combined) message
     // frame; skip it entirely when nobody will read the lineage.
     val track = config.trackMetrics || config.checkpointDir.isDefined
-    val result = iterate(initial, edges, config) { (state, _) =>
+    val result = iterate(initial, Some(edges), config) { (state, _) =>
       // scatter: active sources emit along their out-edges, then combine.
       val active = state.where(col(ACTIVE))
       val raw = edges.join(active, edges("src") === active("id"))
@@ -309,20 +303,14 @@ final class CheckpointManager(dir: String) {
 
   def save(state: DataFrame, k: Int, m: SuperstepMetrics): DataFrame = {
     val path = statePath(k)
-    // the record goes first: every committed (_SUCCESS) state has one
-    Files.createDirectories(root.resolve(s"superstep=$k"))
-    Files.writeString(metricsPath(k), m.toJson)
     state.write.mode("overwrite").parquet(path)
+    Files.writeString(root.resolve(s"superstep=$k").resolve("metrics.json"), m.toJson)
     Files.writeString(root.resolve("lineage.jsonl"), m.toJson + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     state.sparkSession.read.parquet(path)
   }
 
-  private def metricsPath(k: Int) = root.resolve(s"superstep=$k").resolve("metrics.json")
-
   def load(spark: SparkSession, k: Int): DataFrame = spark.read.parquet(statePath(k))
-
-  def metrics(k: Int): SuperstepMetrics = SuperstepMetrics.fromJson(Files.readString(metricsPath(k)))
 
   /** Highest superstep with a completed (_SUCCESS) state write. */
   def latestSuperstep: Option[Int] = {
