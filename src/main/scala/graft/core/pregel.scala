@@ -132,13 +132,13 @@ object Pregel {
     Lineage.withFastIteration(spark, bigWork) {
 
     // start from the latest durable checkpoint, or from `initial`; either
-    // way one barrier cuts its lineage and observes superstep k's record.
+    // way one barrier cuts its lineage and observes that superstep's record.
     val t0 = System.currentTimeMillis()
-    val k = ckpt.flatMap(_.latestSuperstep).getOrElse(0)
+    val start = ckpt.flatMap(_.latestSuperstep).getOrElse(0)
     val (cut, _, active0, delta0) =
-      barrier(if (k > 0) ckpt.get.load(spark, k) else initial)
+      barrier(if (start > 0) ckpt.get.load(spark, start) else initial)
     var state = cut
-    var last = SuperstepMetrics(k, active0, -1L, delta0, 1.0, System.currentTimeMillis() - t0)
+    var last = SuperstepMetrics(start, active0, -1L, delta0, 1.0, System.currentTimeMillis() - t0)
     var converged = false
     val history = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
 
