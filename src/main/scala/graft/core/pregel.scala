@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -20,11 +20,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  *                        parquet — this both cuts lineage and guarantees a
  *                        resumed run continues from byte-identical state.
  * @param checkpointEvery cadence of durable checkpoints
- * @param trackMetrics    when true, per-superstep lineage metrics
- *                        (messages, active vertices, delta norm, skew
- *                        ratio, wall ms) are computed and appended to
- *                        `<dir>/lineage.jsonl` (or kept in memory when no
- *                        dir is configured)
+ * @param trackMetrics    when true, [[Pregel.run]] also records each
+ *                        superstep's message count and skew ratio (see
+ *                        [[SuperstepMetrics]]); they are observed on the
+ *                        barrier's action, so this costs no extra Spark job.
+ *                        Records are appended to `<dir>/lineage.jsonl` (or
+ *                        kept in memory when no dir is configured)
  * @param stopAfter       test hook: abort the loop after superstep k as if
  *                        the job died (used by resume tests)
  */
@@ -37,7 +38,18 @@ final case class PregelConfig(
 
 /** One superstep's lineage record (north rule: "every superstep writes
  *  per-partition lineage and metrics — messages sent, delta norm, skew
- *  ratio — to a checkpoint directory"). */
+ *  ratio — to a checkpoint directory"). Every field is observed on the
+ *  superstep's one barrier action.
+ *
+ *  @param activeVertices ACTIVE rows of the new state
+ *  @param messages  rows of the combined-message frame (one per receiving
+ *                   vertex); -1 when the step does not track it
+ *  @param deltaNorm max |DELTA| over the new state
+ *  @param skewRatio max ÷ mean rows over the non-empty buckets
+ *                   `pmod(hash(id), spark.sql.shuffle.partitions)` of the
+ *                   combined-message frame, i.e. its partitions as
+ *                   `hashpartitioning(id)` lays them out before AQE
+ *                   coalescing; 1.0 when not tracked or no message was sent */
 final case class SuperstepMetrics(
     superstep: Int,
     activeVertices: Long,
@@ -58,13 +70,16 @@ final case class PregelResult(
     metrics: Seq[SuperstepMetrics])
 
 /** What one superstep hands [[Pregel.iterate]]: the plan of the next state
- *  (its columns include the ACTIVE / CHANGED / DELTA markers), the
- *  combined-message count and skew ratio when the step measured them, and
- *  a release hook for the step's own intermediates, run after the barrier. */
+ *  (its columns include the ACTIVE / CHANGED / DELTA markers), readers of
+ *  the combined-message count and skew ratio, and a release hook for the
+ *  step's own intermediates. `iterate` calls the readers and the hook after
+ *  the barrier, so a step can observe its metrics on the barrier's action
+ *  (see [[Pregel.run]]) instead of running a job of its own; steps that do
+ *  not measure them leave the defaults (-1 messages, skew 1.0). */
 final case class StepPlan(
     next: DataFrame,
-    messages: Long = -1L,
-    skewRatio: Double = 1.0,
+    messages: () => Long = () => -1L,
+    skewRatio: () => Double = () => 1.0,
     cleanup: () => Unit = () => ())
 
 /** Thrown by the `stopAfter` test hook to simulate a mid-run crash. */
@@ -153,12 +168,13 @@ object Pregel {
       // a 46 M-edge run).
       Lineage.release(state)
       state = next
-      last = SuperstepMetrics(last.superstep + 1, active, plan.messages, delta,
-        plan.skewRatio, System.currentTimeMillis() - t0)
+      last = SuperstepMetrics(last.superstep + 1, active, plan.messages(), delta,
+        plan.skewRatio(), System.currentTimeMillis() - t0)
       history += last
 
       converged = changed == 0
       ckpt.foreach { c =>
+        c.record(last)
         if (last.superstep % config.checkpointEvery == 0 || converged) {
           // durable checkpoint: parquet round-trip cuts lineage AND is the
           // exact state a resumed run would start from.
@@ -227,34 +243,44 @@ object Pregel {
       combine: DataFrame => DataFrame,
       updateExprs: Seq[Column],
       config: PregelConfig = PregelConfig()): PregelResult = {
-    // metrics cost one extra pass over the (small, pre-combined) message
-    // frame; skip it entirely when nobody will read the lineage.
+    // metrics ride the barrier: an Observation on the combined-message
+    // frame is filled in by the barrier's own action, so tracking them
+    // costs no extra Spark job and leaves the superstep's plan as it is.
     val track = config.trackMetrics || config.checkpointDir.isDefined
+    val buckets = edges.sparkSession.sessionState.conf.numShufflePartitions
     val result = iterate(initial, Some(edges), config) { (state, _) =>
       // scatter: active sources emit along their out-edges, then combine.
       val active = state.where(col(ACTIVE))
       val raw = edges.join(active, edges("src") === active("id"))
         .select(edges("dst").as("id"), msgExpr.as(MSG))
+      val msgs = combine(raw)
       // gather/apply: old state LEFT JOIN messages → new state
       def update(msgs: DataFrame) = state.join(msgs, Seq("id"), "left_outer")
         .select(col("id") +: updateExprs: _*)
-      if (!track) StepPlan(update(combine(raw)))
+      if (!track) StepPlan(update(msgs))
       else {
-        val msgs = combine(raw).persist(StorageLevel.MEMORY_AND_DISK)
-        StepPlan(update(msgs), msgs.count(), skewRatio(msgs), () => msgs.unpersist())
+        val obs = Observation()
+        val observed = msgs.observe(obs, count(lit(1)).as("messages"),
+          histogram_numeric(pmod(hash(col("id")), lit(buckets)), lit(buckets)).as("buckets"))
+        StepPlan(update(observed), () => obs.get("messages").asInstanceOf[Long],
+          () => skewRatio(obs.get("buckets")))
       }
     }
     Lineage.release(edges)
     result
   }
 
-  /** max/mean rows per partition of the combined-message frame — the skew
-   *  signal the north rule asks for (hub vertices → hot partitions). */
-  private def skewRatio(msgs: DataFrame): Double = {
-    val counts = msgs.groupBy(spark_partition_id().as("p")).count()
-      .agg(max("count").cast("double").as("mx"), avg("count").as("mean")).head()
-    if (counts.isNullAt(0) || counts.getDouble(1) == 0.0) 1.0
-    else counts.getDouble(0) / counts.getDouble(1)
+  /** max ÷ mean rows over the non-empty hash buckets of the combined-message
+   *  frame — the skew signal the north rule asks for (hub vertices → hot
+   *  partitions). `bins` is `histogram_numeric`'s (bucket, rows) array, or
+   *  null when no message was sent. Merged partial histograms keep equal
+   *  buckets apart while they fit in the bin budget, so rows are summed per
+   *  bucket here; they are never folded across buckets, since there are at
+   *  most as many buckets as bins. */
+  private def skewRatio(bins: Any): Double = {
+    val rows = Option(bins).toSeq.flatMap(_.asInstanceOf[Seq[Row]])
+      .groupMapReduce(_.get(0))(_.getDouble(1))(_ + _).values
+    if (rows.isEmpty) 1.0 else rows.max / (rows.sum / rows.size)
   }
 }
 
@@ -289,7 +315,9 @@ object Combiners {
  *
  *   <dir>/superstep=<k>/state/   parquet vertex state (atomic via _SUCCESS)
  *   <dir>/superstep=<k>/metrics.json
- *   <dir>/lineage.jsonl          append-only, one line per superstep
+ *   <dir>/lineage.jsonl          append-only, one line per superstep run
+ *                                (a resumed run appends the supersteps it
+ *                                replays after the loaded checkpoint again)
  *
  * Resume = load the highest superstep whose parquet write completed, then
  * continue the loop; Pregel.iterate does this automatically when the dir is
@@ -301,12 +329,16 @@ final class CheckpointManager(dir: String) {
 
   def statePath(k: Int): String = root.resolve(s"superstep=$k").resolve("state").toString
 
+  /** Append one superstep's record to `lineage.jsonl`. */
+  def record(m: SuperstepMetrics): Unit =
+    Files.writeString(root.resolve("lineage.jsonl"), m.toJson + "\n",
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+
+  /** Write superstep k's state and record; returns the state re-read. */
   def save(state: DataFrame, k: Int, m: SuperstepMetrics): DataFrame = {
     val path = statePath(k)
     state.write.mode("overwrite").parquet(path)
     Files.writeString(root.resolve(s"superstep=$k").resolve("metrics.json"), m.toJson)
-    Files.writeString(root.resolve("lineage.jsonl"), m.toJson + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     state.sparkSession.read.parquet(path)
   }
 

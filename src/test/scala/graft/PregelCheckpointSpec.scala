@@ -3,6 +3,10 @@ package graft
 import graft.algos.{LabelPropagation, PageRank, Wcc}
 import graft.core._
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -128,6 +132,19 @@ class PregelCheckpointSpec extends SparkSpec {
     assert(longs(r.vertices.select("id", "n")).values.toSet == Set(3L))
   }
 
+  test("checkpointEvery = 2 writes state at 2, 4 and convergence, and a record every superstep") {
+    val dir = tmpDir("iterate-every")
+    val r = counter(PregelConfig(checkpointDir = Some(dir), checkpointEvery = 2),
+      collection.mutable.Buffer())
+    assert(r.converged && r.supersteps == 5)
+    val ckpt = new CheckpointManager(dir)
+    val written = (1 to 5).filter(k => Files.exists(
+      java.nio.file.Paths.get(ckpt.statePath(k)).resolve("_SUCCESS")))
+    assert(written == Seq(2, 4, 5))
+    assert(ckpt.lineage.size == 5)
+    assert(ckpt.lineage.zipWithIndex.forall { case (l, i) => l.contains(s""""superstep":${i + 1},""") })
+  }
+
   test("iterate: a resumed run starts from the checkpointed superstep") {
     val dir = tmpDir("iterate-ckpt")
     intercept[PregelKilledException] {
@@ -141,4 +158,88 @@ class PregelCheckpointSpec extends SparkSpec {
     assert(seen.map(_.superstep) == (2 to 4) && seen.head.activeVertices == 3)
     assert(longs(r.vertices.select("id", "n")).values.toSet == Set(5L))
   }
+
+  /** 300 nodes, ~3000 random directed edges, no self-loops. */
+  def seededGraph: PropertyGraph = {
+    val rnd = new scala.util.Random(11)
+    graphOf(300, Seq.fill(3000)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .filter { case (s, d) => s != d })
+  }
+
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      TestBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, before)
+  }
+
+  test("tracking metrics leaves PageRank, WCC and LPA results bit-identical") {
+    val g = seededGraph
+    val tracked = PregelConfig(trackMetrics = true)
+    def differ(a: Map[Long, _], b: Map[Long, _]): Int =
+      a.count { case (id, v) => !b.get(id).contains(v) } + (b.keySet -- a.keySet).size
+    def pr(p: PregelConfig) = scores(PageRank.run(g, PageRank.Config(tolerance = 0.0,
+      orientation = Orientation.Undirected, pregel = p)))
+    val (prOn, prOff) = (pr(tracked), pr(PregelConfig()))
+    assert(prOn.size == 300 && differ(prOn, prOff) == 0,
+      s"${differ(prOn, prOff)} of 300 PageRank scores differ")
+    val wcc = (p: PregelConfig) => longs(Wcc.run(g, Wcc.Config(pregel = p)))
+    assert(differ(wcc(tracked), wcc(PregelConfig())) == 0)
+    val lpa = (p: PregelConfig) => longs(LabelPropagation.run(g, LabelPropagation.Config(pregel = p)))
+    assert(differ(lpa(tracked), lpa(PregelConfig())) == 0)
+  }
+
+  for (n <- Seq(4, 200))
+    test(s"tracked metrics cost no Spark job and match a recount (shuffle partitions = $n)") {
+      withShufflePartitions(n) {
+        val g = seededGraph
+        def pr(p: PregelConfig) = jobsDuring(PageRank.runWithMetrics(g,
+          PageRank.Config(maxIterations = 8, pregel = p)).vertices.count())
+        val (_, untracked) = pr(PregelConfig())
+        val (_, tracked) = pr(PregelConfig(trackMetrics = true))
+        assert(tracked == untracked, "tracked run spends extra jobs")
+
+        // min-label propagation whose combiner recounts each superstep's
+        // combined-message frame with separate jobs, the way the records
+        // define it
+        import Pregel._
+        val expected = collection.mutable.Buffer[(Long, Double)]()
+        val recount: DataFrame => DataFrame = { raw =>
+          val msgs = Combiners.min(raw)
+          val rows = msgs.groupBy(pmod(hash(col("id")), lit(n))).count()
+            .collect().map(_.getLong(1).toDouble)
+          expected += msgs.count() ->
+            (if (rows.isEmpty) 1.0 else rows.max / (rows.sum / rows.length))
+          msgs
+        }
+        val initial = g.nodes.select(col("id"), col("id").as("label"),
+          lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
+        val moved = coalesce(col(MSG), col("label")) < col("label")
+        val r = Pregel.run(initial,
+          g.pregelEdges(Orientation.Undirected, Aggregation.Count, withWeight = false),
+          col("label"), recount,
+          Seq(least(col("label"), coalesce(col(MSG), col("label"))).as("label"),
+            moved.as(ACTIVE), moved.as(CHANGED), lit(0.0).as(DELTA)),
+          PregelConfig(trackMetrics = true))
+        assert(r.converged && r.metrics.nonEmpty)
+        assert(r.metrics.map(m => (m.messages, m.skewRatio)) == expected.toSeq)
+        assert(expected.exists(_._2 > 1.0), "the graph shows no skew to check")
+      }
+    }
 }
