@@ -66,18 +66,21 @@ object Betweenness {
       // reached = union of the per-level materialized frames (each already
       // lineage-cut, so the anti-join plan stays flat across levels).
       val reached = levels.map(_.select(col("s"), col("v"))).reduce(_ unionByName _)
+      // the level's size rides its checkpoint action
+      val obs = org.apache.spark.sql.Observation()
       val next = edges
         .join(frontier.select(col("v").as("src"), col("s"), col("sigma")), Seq("src"))
         .groupBy(col("s"), col("dst").as("v"))
         .agg(sum("sigma").as("sigma"))
         .join(reached, Seq("s", "v"), "left_anti")
+        .observe(obs, count(lit(1)).as("rows"))
         .cutLineage()
-      frontierCount = next.count()
+      frontierCount = obs.get("rows").asInstanceOf[Long]
       if (frontierCount > 0) {
         levels += next
         frontier = next
         depth += 1
-      }
+      } else Lineage.release(next)
     }
 
     // ---- backward phase: dependency accumulation, deepest level first.
@@ -114,12 +117,12 @@ object Betweenness {
       .where(col("v") =!= col("s"))
       .groupBy(col("v").as("id"))
       .agg((sum("delta") / divisor).as("score"))
-    // both edge layouts are dead here: every level/delta frame is already
-    // independently checkpointed, so the result plan never re-reads them.
-    Lineage.release(edges)
-    Lineage.release(edgesByDst)
-    graph.nodes.select(col("id"))
+    val result = graph.nodes.select(col("id"))
       .join(bc, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("score"), lit(0.0)).as("score"))
+      .cutLineage()
+    // the cut result reads none of the edge layouts, levels or deltas
+    (Seq(edges, edgesByDst) ++ levels ++ deltaParts).foreach(Lineage.release)
+    result
   }
 }

@@ -60,6 +60,7 @@ object HyperBall {
       pmod(xxhash64(col("id"), lit(config.seed)), lit(m.toLong)).cast("int").as("j"),
       least(floor(-log2(h2u)) + 1, lit(30.0)).cast("int").as("r"))
       .cutLineage()
+    Lineage.release(nodes)
 
     /** HLL estimate per node from the sparse register rows: zeros register
      *  contribute 2^0 = 1 each; linear counting below the 2.5m knee.

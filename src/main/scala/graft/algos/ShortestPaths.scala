@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.core._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /**
@@ -38,41 +38,32 @@ object ShortestPaths {
    *  re-checkpointed the full edge frame. */
   private final case class Ctx(edges: DataFrame, nodes: DataFrame, bigWork: Boolean)
 
-  private def prepare(graph: PropertyGraph, orientation: Orientation): Ctx = {
+  /** Run `body` on a prepared context; the edge layout is released after. */
+  private def prepared[A](graph: PropertyGraph, orientation: Orientation)(body: Ctx => A): A = {
     // prepared layout (PropertyGraph.pregelEdges): min-aggregated edges in
     // one shuffle, sorted within hash(src) partitions so no spur/iteration
     // join re-sorts the big side; exclusion filters preserve both.
     val e = graph.pregelEdges(orientation, Aggregation.Min)
-    val n = graph.nodes.select(col("id"))
-    Ctx(e, n, e.count() >= Lineage.aqeOffMinEdges(graph.spark))
+    val ctx = Ctx(e, graph.nodes.select(col("id")), e.count() >= Lineage.aqeOffMinEdges(graph.spark))
+    try body(ctx) finally Lineage.release(e)
   }
 
-  /** Distributed relaxation with predecessor tracking. Each iteration is
-   *  ONE Spark action: the frontier count and the target's distance upper
-   *  bound both ride the materializing checkpoint via observe(), the same
-   *  single-action superstep pattern as [[graft.core.Pregel]].
+  /** Distributed relaxation with predecessor tracking on [[Pregel.iterate]],
+   *  spur exclusions applied as partitioning-preserving filters (no
+   *  re-shuffle, no re-checkpoint). A vertex is ACTIVE (and CHANGED) when
+   *  its distance improved and it passes the A* cutoff against the upper
+   *  bound UB: ∞ in superstep 1, then the target's distance after the
+   *  previous superstep. That distance is observed on the previous barrier's
+   *  action (the Observation rides `plan.next`), so the bound costs no job.
+   *  The AQE decision is the prepared layout's (`ctx.bigWork`), made once.
    *  @param heuristic optional (id, h) frame enabling A* pruning toward `target`
-   *  @return (id, dist, pred) — pred null for source/unreached */
-  def relax(
-      edges: DataFrame, // (src, dst, weight), orientation applied
-      nodes: DataFrame, // (id)
-      source: Long,
-      target: Option[Long] = None,
-      heuristic: Option[DataFrame] = None,
-      maxIterations: Int = 100): DataFrame = {
-    val edgesPart = Lineage.sortedCheckpoint(edges.repartition(col("src")), "src")
-    val big = edgesPart.count() >= Lineage.aqeOffMinEdges(nodes.sparkSession)
-    relaxCore(Ctx(edgesPart, nodes, big), Set.empty, Set.empty,
-      source, target, heuristic, maxIterations)
-  }
-
-  /** Relaxation over a prepared context with spur exclusions applied as
-   *  partitioning-preserving filters (no re-shuffle, no re-checkpoint). */
+   *  @return cut (id, dist, pred) — pred null for source/unreached; the
+   *          caller releases it */
   private def relaxCore(ctx: Ctx,
       excludedEdges: Set[(Long, Long)], excludedNodes: Set[Long],
-      source: Long, target: Option[Long], heuristic: Option[DataFrame],
-      maxIterations: Int): DataFrame = Lineage.withFastIteration(
-        ctx.nodes.sparkSession, ctx.bigWork) {
+      source: Long, target: Long, heuristic: Option[DataFrame],
+      maxIterations: Int): DataFrame = {
+    import Pregel._
     val eEdge = excludedEdges.foldLeft(ctx.edges) { case (f, (s, t)) =>
       f.where(!(col("src") === s && col("dst") === t))
     }
@@ -86,54 +77,40 @@ object ShortestPaths {
       col("id"),
       when(col("id") === source, 0.0).otherwise(lit(Double.PositiveInfinity)).as("dist"),
       lit(null).cast("long").as("pred"),
-      (col("id") === source).as("active"))
-    var state = (h match {
+      (col("id") === source).as(ACTIVE),
+      (col("id") === source).as(CHANGED),
+      lit(0.0).as(DELTA))
+    val initial = h match {
       case Some(hf) => base.join(hf, Seq("id"), "left_outer")
         .withColumn("h", coalesce(col("h"), lit(0.0)))
       case None => base.withColumn("h", lit(0.0))
-    }).cutLineage()
-
-    var iter = 0
-    var active = 1L
-    // A* upper bound = target's distance in the PREVIOUS state (starts ∞),
-    // carried driver-side from the prior iteration's observation.
-    var ub = Double.PositiveInfinity
-    while (active > 0 && iter < maxIterations) {
-      val frontier = state.where(col("active"))
-        .select(col("id").as("src"), col("dist").as("sd"))
-      val msgs = edgesPart.join(frontier, Seq("src"))
-        .select(col("dst").as("id"),
-          struct((col("sd") + col("weight")).as("d"), col("src").as("p")).as("m"))
-        .groupBy("id").agg(min("m").as("m"))
-      val improved = col("m").isNotNull && col("m")("d") < col("dist")
-      val obs = org.apache.spark.sql.Observation()
-      val tdistMetric = target match {
-        case Some(t) => min(when(col("id") === t, col("dist")))
-        case None    => min(lit(Double.PositiveInfinity))
-      }
-      val next = state.join(msgs, Seq("id"), "left_outer")
-        .select(col("id"),
-          when(improved, col("m")("d")).otherwise(col("dist")).as("dist"),
-          when(improved, col("m")("p")).otherwise(col("pred")).as("pred"),
-          // A* cutoff: an improved node rescatters only if it could still
-          // better the known target distance.
-          (improved &&
-            (when(improved, col("m")("d")).otherwise(col("dist")) + col("h") < ub))
-            .as("active"),
-          col("h"))
-        .observe(obs,
-          sum(col("active").cast("long")).as("act"),
-          tdistMetric.as("tdist"))
-        .cutLineage()
-      Lineage.release(state)
-      state = next
-      val metrics = obs.get
-      active = Option(metrics("act")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      ub = Option(metrics("tdist")).map(_.asInstanceOf[Double])
-        .getOrElse(Double.PositiveInfinity)
-      iter += 1
     }
-    state.select(col("id"), col("dist"), col("pred"))
+
+    // A* upper bound: the target's distance observed on the previous barrier
+    var ub = () => Double.PositiveInfinity
+    Lineage.withFastIteration(ctx.nodes.sparkSession, ctx.bigWork) {
+      Pregel.iterate(initial, None, PregelConfig(maxIterations = maxIterations)) { (state, _) =>
+        val bound = ub()
+        val frontier = state.where(col(ACTIVE))
+          .select(col("id").as("src"), col("dist").as("sd"))
+        val msgs = edgesPart.join(frontier, Seq("src"))
+          .select(col("dst").as("id"),
+            struct((col("sd") + col("weight")).as("d"), col("src").as("p")).as("m"))
+          .groupBy("id").agg(min("m").as("m"))
+        val improved = col("m").isNotNull && col("m")("d") < col("dist")
+        val dist = when(improved, col("m")("d")).otherwise(col("dist"))
+        // A* cutoff: an improved node rescatters only if it could still
+        // better the known target distance.
+        val rescatter = improved && dist + col("h") < bound
+        val next = state.join(msgs, Seq("id"), "left_outer")
+          .select(col("id"), dist.as("dist"),
+            when(improved, col("m")("p")).otherwise(col("pred")).as("pred"),
+            rescatter.as(ACTIVE), rescatter.as(CHANGED), lit(0.0).as(DELTA), col("h"))
+        val obs = Observation()
+        ub = () => Option(obs.get("tdist")).fold(Double.PositiveInfinity)(_.asInstanceOf[Double])
+        StepPlan(next.observe(obs, min(when(col("id") === target, col("dist"))).as("tdist")))
+      }
+    }.vertices.select(col("id"), col("dist"), col("pred"))
   }
 
   /** Walk preds target→source. None when target unreached. One collect of
@@ -172,33 +149,26 @@ object ShortestPaths {
     Some(PathResult(path, cost))
   }
 
-  /** Plain weighted Dijkstra path source→target. Passes `target` into the
-   *  relaxation so the A* upper-bound cutoff (h = 0) applies: once the
+  /** Plain weighted Dijkstra path source→target. The relaxation knows
+   *  `target`, so the A* upper-bound cutoff (h = 0) applies: once the
    *  target has a finite distance, nodes at ≥ that bound stop scattering —
    *  identical distances for every node that can matter to the path
    *  (anything pruned was already ≥ the final target distance), fewer
    *  frontier iterations. */
   def dijkstra(graph: PropertyGraph, source: Long, target: Long,
       orientation: Orientation = Orientation.Natural,
-      maxIterations: Int = 100): Option[PathResult] = {
-    val r = relaxCore(prepare(graph, orientation), Set.empty, Set.empty,
-      source, Some(target), None, maxIterations).cutLineage()
-    val res = reconstruct(r, source, target)
-    Lineage.release(r)
-    res
-  }
+      maxIterations: Int = 100): Option[PathResult] =
+    prepared(graph, orientation)(
+      path(_, source, target, Set.empty, Set.empty, None, maxIterations))
 
   /** A* with a per-node admissible heuristic (id, h) — same result as
    *  Dijkstra, fewer scattered frontiers (ShortestPathAStar.java:40). */
   def aStar(graph: PropertyGraph, source: Long, target: Long,
       heuristic: DataFrame,
       orientation: Orientation = Orientation.Natural,
-      maxIterations: Int = 100): Option[PathResult] = {
-    val e = graph.aggregated(orientation, Aggregation.Min)
-    val r = relax(e, graph.nodes.select(col("id")), source, Some(target),
-      Some(heuristic), maxIterations).cutLineage()
-    reconstruct(r, source, target)
-  }
+      maxIterations: Int = 100): Option[PathResult] =
+    prepared(graph, orientation)(
+      path(_, source, target, Set.empty, Set.empty, Some(heuristic), maxIterations))
 
   /** Dijkstra with excluded directed edges / nodes — the primitive Yen's
    *  spur computation needs (YensTest filter semantics: directed pairs). */
@@ -206,17 +176,17 @@ object ShortestPaths {
       excludedEdges: Set[(Long, Long)], excludedNodes: Set[Long],
       orientation: Orientation = Orientation.Natural,
       maxIterations: Int = 100): Option[PathResult] =
-    spurDijkstra(prepare(graph, orientation), source, target,
-      excludedEdges, excludedNodes, maxIterations)
+    prepared(graph, orientation)(
+      path(_, source, target, excludedEdges, excludedNodes, None, maxIterations))
 
-  private def spurDijkstra(ctx: Ctx, source: Long, target: Long,
+  /** One relaxation over `ctx` and the path it yields; the relaxed state is
+   *  released before returning. */
+  private def path(ctx: Ctx, source: Long, target: Long,
       excludedEdges: Set[(Long, Long)], excludedNodes: Set[Long],
-      maxIterations: Int): Option[PathResult] = {
+      heuristic: Option[DataFrame], maxIterations: Int): Option[PathResult] = {
     val r = relaxCore(ctx, excludedEdges, excludedNodes,
-      source, Some(target), None, maxIterations).cutLineage()
-    val res = reconstruct(r, source, target)
-    Lineage.release(r)
-    res
+      source, target, heuristic, maxIterations)
+    try reconstruct(r, source, target) finally Lineage.release(r)
   }
 
   /**
@@ -228,48 +198,42 @@ object ShortestPaths {
    */
   def yens(graph: PropertyGraph, source: Long, target: Long, k: Int,
       orientation: Orientation = Orientation.Natural,
-      maxIterations: Int = 100): Seq[PathResult] = {
+      maxIterations: Int = 100): Seq[PathResult] = prepared(graph, orientation) { ctx =>
     // ONE prepared edge layout + AQE gate for the whole spur tree — each of
     // the O(k·pathLen) inner Dijkstras previously re-shuffled and
     // re-checkpointed the full edge frame.
-    val ctx = prepare(graph, orientation)
-    val first = spurDijkstra(ctx, source, target, Set.empty, Set.empty,
-      maxIterations).getOrElse { Lineage.release(ctx.edges); return Seq.empty }
-    val accepted = scala.collection.mutable.ArrayBuffer(first)
+    def spur(from: Long, edges: Set[(Long, Long)], nodes: Set[Long]) =
+      path(ctx, from, target, edges, nodes, None, maxIterations)
+    val accepted = scala.collection.mutable.ArrayBuffer.from(spur(source, Set.empty, Set.empty))
     // candidate pool keyed by path to dedup
     val candidates = scala.collection.mutable.Map[Seq[Long], Double]()
 
-    while (accepted.size < k) {
+    var exhausted = accepted.isEmpty
+    while (!exhausted && accepted.size < k) {
       val prev = accepted.last.path
       // cost of every root prefix of `prev` in ONE tiny job (was one
       // distributed lookup per spur index)
       val prefixCost = prefixCosts(ctx, prev)
       for (i <- 0 until prev.length - 1) {
-        val spurNode = prev(i)
         val rootPath = prev.take(i + 1)
-        val rootCost = prefixCost(i)
         val removedEdges = accepted.map(_.path)
           .filter(p => p.length > i && p.take(i + 1) == rootPath)
           .map(p => (p(i), p(i + 1))).toSet
-        val removedNodes = rootPath.dropRight(1).toSet
-        spurDijkstra(ctx, spurNode, target, removedEdges, removedNodes,
-          maxIterations).foreach { spur =>
-          val total = rootPath.dropRight(1) ++ spur.path
+        spur(prev(i), removedEdges, rootPath.dropRight(1).toSet).foreach { s =>
+          val total = rootPath.dropRight(1) ++ s.path
           if (!accepted.exists(_.path == total))
-            candidates.get(total) match {
-              case Some(_) => ()
-              case None => candidates(total) = rootCost + spur.cost
-            }
+            candidates.getOrElseUpdate(total, prefixCost(i) + s.cost)
         }
       }
-      if (candidates.isEmpty) { Lineage.release(ctx.edges); return accepted.toSeq }
-      val best = candidates.toSeq
-        .minBy { case (p, c) => (c, p.map(_.toString).mkString(",")) }(
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
-      candidates.remove(best._1)
-      accepted += PathResult(best._1, best._2)
+      exhausted = candidates.isEmpty
+      if (!exhausted) {
+        val best = candidates.toSeq
+          .minBy { case (p, c) => (c, p.map(_.toString).mkString(",")) }(
+            Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
+        candidates.remove(best._1)
+        accepted += PathResult(best._1, best._2)
+      }
     }
-    Lineage.release(ctx.edges)
     accepted.toSeq
   }
 

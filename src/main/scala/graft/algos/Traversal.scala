@@ -101,6 +101,7 @@ object Traversal {
       orientation: Orientation = Orientation.Natural,
       maxBuckets: Int = 1000): DataFrame = {
     require(delta > 0.0, "delta must be positive")
+    import Pregel._
     // one prepared layout (hash(src)-partitioned, sorted, checkpointed);
     // the light/heavy splits are FILTERS on top — they inherit the layout,
     // so every bucket relaxation joins exchange- and sort-free.
@@ -108,6 +109,8 @@ object Traversal {
     val light = all.where(col("weight") <= delta)
     val heavy = all.where(col("weight") > delta)
 
+    /** `state` after one relaxation of `edges` from `frontier`; `updated`
+     *  marks the lowered distances. */
     def relax(state: DataFrame, frontier: DataFrame, edges: DataFrame): DataFrame = {
       val msgs = edges
         .join(frontier.select(col("id").as("src"), col("dist").as("sd")), Seq("src"))
@@ -116,13 +119,11 @@ object Traversal {
         .select(col("id"),
           least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
           (coalesce(col("nd"), col("dist")) < col("dist")).as("updated"))
-        .cutLineage()
     }
 
     var state = graph.nodes.select(
       col("id"),
-      when(col("id") === source, 0.0).otherwise(lit(Double.PositiveInfinity)).as("dist"),
-      (col("id") === source).as("updated"))
+      when(col("id") === source, 0.0).otherwise(lit(Double.PositiveInfinity)).as("dist"))
       .cutLineage()
 
     var k = 0
@@ -131,22 +132,19 @@ object Traversal {
       val inBucket = floor(col("dist") / delta) === k && !col("dist").isNaN
       // light-edge fixpoint within bucket k: start from every bucket-k
       // vertex, continue from vertices updated INTO bucket k.
-      var frontier = state.where(inBucket)
-      var frontierCount = frontier.count()
-      while (frontierCount > 0) {
-        val next = relax(state, frontier, light)
-        Lineage.release(state)
-        state = next
-        frontier = state.where(col("updated") && inBucket)
-        frontierCount = frontier.count()
-      }
+      val fixpoint = Pregel.iterate(
+          state.select(col("id"), col("dist"), inBucket.as(ACTIVE), inBucket.as(CHANGED),
+            lit(0.0).as(DELTA)),
+          None, PregelConfig(maxIterations = Int.MaxValue)) { (s, _) =>
+        val intoBucket = col("updated") && inBucket
+        StepPlan(relax(s, s.where(col(ACTIVE)), light).select(col("id"), col("dist"),
+          intoBucket.as(ACTIVE), intoBucket.as(CHANGED), lit(0.0).as(DELTA)))
+      }.vertices
+      Lineage.release(state)
       // one heavy relaxation from the settled bucket
-      val settled = state.where(inBucket)
-      if (settled.limit(1).count() > 0) {
-        val next = relax(state, settled, heavy)
-        Lineage.release(state)
-        state = next
-      }
+      state = relax(fixpoint, fixpoint.where(inBucket), heavy)
+        .select(col("id"), col("dist")).cutLineage()
+      Lineage.release(fixpoint)
       // next non-empty bucket (skip gaps in one action)
       val nextRow = state
         .where(col("dist") =!= Double.PositiveInfinity &&
@@ -176,58 +174,35 @@ object Traversal {
       weighted: Boolean = false,
       orientation: Orientation = Orientation.Natural,
       maxIterations: Int = 50): DataFrame = {
+    import Pregel._
     val srcs = sources.getOrElse(graph.nodes.select(col("id")))
-    if (!weighted) {
-      val edges = graph.pregelEdges(orientation, Aggregation.Count,
-        withWeight = false)
-      var reachedLevels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      var frontier = srcs.select(col("id").as("s"), col("id").as("v"), lit(0L).as("d"))
-        .cutLineage()
-      reachedLevels += frontier
-      var depth = 0
-      var n = frontier.count()
-      while (n > 0 && depth < maxIterations) {
-        val seen = reachedLevels.map(_.select(col("s"), col("v"))).reduce(_ unionByName _)
-        val next = edges
-          .join(frontier.select(col("v").as("src"), col("s")), Seq("src"))
-          .select(col("s"), col("dst").as("v")).distinct()
-          .join(seen, Seq("s", "v"), "left_anti")
-          .withColumn("d", lit(depth + 1L))
-          .cutLineage()
-        n = next.count()
-        if (n > 0) { reachedLevels += next; frontier = next; depth += 1 }
-      }
-      // every level is checkpointed; the prepared edge layout can go.
-      Lineage.release(edges)
-      reachedLevels.reduce(_ unionByName _)
-        .select(col("s").as("source"), col("v").as("target"),
-          col("d").cast("double").as("distance"))
-    } else {
-      import Pregel._
-      val edges = graph.pregelEdges(orientation, Aggregation.Min)
-      // batched Bellman-Ford on (s, v) pairs; a pair whose distance
-      // improved is the only one that relaxes its out-edges next round
-      val initial = srcs.select(col("id").as("s"), col("id").as("v"), lit(0.0).as("d"),
-        lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
-      val result = Pregel.iterate(initial, None,
-          PregelConfig(maxIterations = maxIterations)) { (state, _) =>
-        val msgs = edges
-          .join(state.where(col(ACTIVE))
-            .select(col("v").as("src"), col("s"), col("d").as("sd")), Seq("src"))
-          .groupBy(col("s"), col("dst").as("v"))
-          .agg(min(col("sd") + col("weight")).as("nd"))
-        val updated = coalesce(col("nd"), lit(Double.PositiveInfinity)) <
-          coalesce(col("d"), lit(Double.PositiveInfinity))
-        StepPlan(state.join(msgs, Seq("s", "v"), "full_outer")
-          .select(col("s"), col("v"),
-            least(coalesce(col("d"), lit(Double.PositiveInfinity)),
-              coalesce(col("nd"), lit(Double.PositiveInfinity))).as("d"),
-            updated.as(ACTIVE), updated.as(CHANGED), lit(0.0).as(DELTA)))
-      }
-      Lineage.release(edges)
-      result.vertices.select(col("s").as("source"), col("v").as("target"),
-        col("d").as("distance"))
+    // unweighted = unit weights: a pair settles at the first superstep that
+    // reaches it, which is its BFS depth
+    val edges = if (weighted) graph.pregelEdges(orientation, Aggregation.Min)
+      else graph.pregelEdges(orientation, Aggregation.Count, withWeight = false)
+        .withColumn("weight", lit(1.0))
+    // batched Bellman-Ford on (s, v) pairs; a pair whose distance
+    // improved is the only one that relaxes its out-edges next round
+    val initial = srcs.select(col("id").as("s"), col("id").as("v"), lit(0.0).as("d"),
+      lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
+    val result = Pregel.iterate(initial, None,
+        PregelConfig(maxIterations = maxIterations)) { (state, _) =>
+      val msgs = edges
+        .join(state.where(col(ACTIVE))
+          .select(col("v").as("src"), col("s"), col("d").as("sd")), Seq("src"))
+        .groupBy(col("s"), col("dst").as("v"))
+        .agg(min(col("sd") + col("weight")).as("nd"))
+      val updated = coalesce(col("nd"), lit(Double.PositiveInfinity)) <
+        coalesce(col("d"), lit(Double.PositiveInfinity))
+      StepPlan(state.join(msgs, Seq("s", "v"), "full_outer")
+        .select(col("s"), col("v"),
+          least(coalesce(col("d"), lit(Double.PositiveInfinity)),
+            coalesce(col("nd"), lit(Double.PositiveInfinity))).as("d"),
+          updated.as(ACTIVE), updated.as(CHANGED), lit(0.0).as(DELTA)))
     }
+    Lineage.release(edges)
+    result.vertices.select(col("s").as("source"), col("v").as("target"),
+      col("d").as("distance"))
   }
 
   /** Exit-predicate outcomes — reference Traverse.ExitPredicate.Result. */

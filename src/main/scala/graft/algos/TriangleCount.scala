@@ -41,9 +41,6 @@ object TriangleCount {
 
   final case class Config(maxDegree: Option[Long] = None)
 
-  final case class Result(globalTriangles: Long, perNode: DataFrame,
-      averageClusteringCoefficient: Double)
-
   /** Canonical undirected simple edges: src < dst, deduplicated. */
   private def canonicalEdges(graph: PropertyGraph): DataFrame = {
     val e = graph.edges

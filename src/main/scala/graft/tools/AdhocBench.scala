@@ -4,7 +4,6 @@ import graft.core._
 import graft.algos.NodeSimilarity
 import graft.queries.GraphQueries
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /**
  * Ad-hoc experiment driver for measurements that are too heavy for the
@@ -45,103 +44,6 @@ object AdhocBench {
         val n = graft.algos.HyperBall.run(g).count()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""{"experiment":"hyperball_full","sf":"$sfDir","rows":$n,"seconds":$sec%.1f}""")
-      case "tri_profile" =>
-        // stage-level profile of the triangle wedge-close at this density
-        val (g, _) = GraphQueries.simpleGraph(spark, sfDir)
-        g.edges.count()
-        def time[T](label: String)(body: => T): T = {
-          val t0 = System.nanoTime(); val r = body
-          System.err.println(f"[tri] $label: ${(System.nanoTime()-t0)/1e9}%.1fs"); r
-        }
-        val simple = g.edges.select(
-            least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .where(col("a") =!= col("b")).distinct().persist()
-        time("simple.count")(simple.count())
-        val deg = simple.select(col("a").as("id"))
-          .unionByName(simple.select(col("b").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("degree"))
-        val dl = broadcast(deg.select(col("id").as("a"), col("degree").as("da")))
-        val dr = broadcast(deg.select(col("id").as("b"), col("degree").as("db")))
-        val directed = simple.join(dl, Seq("a")).join(dr, Seq("b"))
-          .select(
-            when(col("da") < col("db") ||
-              (col("da") === col("db") && col("a") < col("b")),
-              struct(col("a").as("src"), col("b").as("dst")))
-              .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst")).persist()
-        time("directed.count")(directed.count())
-        val adj = directed.groupBy(col("src").as("id"))
-          .agg(sort_array(collect_set(col("dst"))).as("nbrs")).persist()
-        time("adj.count")(adj.count())
-        val aS = broadcast(adj.select(col("id").as("src"), col("nbrs").as("nsrc")))
-        val aT = broadcast(adj.select(col("id").as("dst"), col("nbrs").as("ndst")))
-        val tris = directed.join(aS, Seq("src")).join(aT, Seq("dst"))
-          .select(col("src"), col("dst"),
-            array_intersect(col("nsrc"), col("ndst")).as("common"))
-          .where(size(col("common")) > 0).persist()
-        val ntri = time("tris.count")(tris.count())
-        val total = time("sum common")(
-          tris.agg(sum(size(col("common")))).head().getLong(0))
-        System.err.println(s"[tri] wedge rows=$ntri totalTriangles(x1)=$total")
-        val corners = tris.select(col("src").as("id"), size(col("common")).cast("long").as("t"))
-          .unionByName(tris.select(col("dst").as("id"), size(col("common")).cast("long").as("t")))
-          .unionByName(tris.select(explode(col("common")).as("id"), lit(1L).as("t")))
-        time("corners groupBy")(corners.groupBy("id").agg(sum("t")).count())
-        println(s"""{"experiment":"tri_profile","triangles":$total}""")
-      case "tri_experiments" =>
-        val (g, _) = GraphQueries.simpleGraph(spark, sfDir)
-        g.edges.count()
-        def time[T](label: String)(body: => T): T = {
-          val t0 = System.nanoTime(); val r = body
-          System.err.println(f"[tri] $label: ${(System.nanoTime()-t0)/1e9}%.1fs"); r
-        }
-        val simple = g.edges.select(
-            least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .where(col("a") =!= col("b")).distinct().persist()
-        simple.count()
-        val deg = simple.select(col("a").as("id"))
-          .unionByName(simple.select(col("b").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("degree"))
-        val dl = broadcast(deg.select(col("id").as("a"), col("degree").as("da")))
-        val dr = broadcast(deg.select(col("id").as("b"), col("degree").as("db")))
-        val directed = simple.join(dl, Seq("a")).join(dr, Seq("b"))
-          .select(
-            when(col("da") < col("db") ||
-              (col("da") === col("db") && col("a") < col("b")),
-              struct(col("a").as("src"), col("b").as("dst")))
-              .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst")).persist()
-        directed.count()
-        val adj = directed.groupBy(col("src").as("id"))
-          .agg(sort_array(collect_set(col("dst"))).as("nbrs")).persist()
-        adj.count()
-        val aS = broadcast(adj.select(col("id").as("src"), col("nbrs").as("nsrc")))
-        val aT = broadcast(adj.select(col("id").as("dst"), col("nbrs").as("ndst")))
-        // E1: size-only intersect, no array output
-        time("E1 size-only count") {
-          directed.join(aS, Seq("src")).join(aT, Seq("dst"))
-            .select(size(array_intersect(col("nsrc"), col("ndst"))).as("c"))
-            .where(col("c") > 0).agg(sum("c")).head()
-        }
-        // E2: shuffle SMJ instead of broadcast (old plan)
-        time("E2 smj size-only") {
-          directed.join(adj.select(col("id").as("src"), col("nbrs").as("nsrc")), Seq("src"))
-            .join(adj.select(col("id").as("dst"), col("nbrs").as("ndst")), Seq("dst"))
-            .select(size(array_intersect(col("nsrc"), col("ndst"))).as("c"))
-            .where(col("c") > 0).agg(sum("c")).head()
-        }
-        // E3: wedge-explode + edge-hash semi join (no arrays at all)
-        time("E3 wedge explode count") {
-          val wedges = directed
-            .join(aS, Seq("src"))
-            .select(col("src"), col("dst"), explode(col("nsrc")).as("m"))
-          wedges.join(directed.select(col("src").as("dst"), col("dst").as("m")),
-              Seq("dst", "m"), "left_semi")
-            .count()
-        }
-        println("""{"experiment":"tri_experiments"}""")
       case other => sys.error(s"unknown experiment: $other")
     }
     spark.stop()

@@ -35,6 +35,18 @@ abstract class SparkSpec extends AnyFunSuite {
     PropertyGraph(nodes, e)
   }
 
+  /** Seeded random weighted graph on ids 0 until n: `m` edges between
+   *  distinct nodes (parallel edges possible), weights uniform in [1, 10). */
+  def randomGraph(n: Int, m: Int, seed: Long): PropertyGraph = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val e = Seq.fill(m) {
+      val s = rnd.nextInt(n)
+      (s.toLong, ((s + 1 + rnd.nextInt(n - 1)) % n).toLong, "REL", 1.0 + 9.0 * rnd.nextDouble())
+    }.toDF("src", "dst", "type", "weight")
+    PropertyGraph(spark.range(n).toDF("id"), e)
+  }
+
   def collectMap[T](df: DataFrame)(implicit num: Numeric[T] = null): Map[Long, Any] =
     df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
 
