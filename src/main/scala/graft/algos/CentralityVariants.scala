@@ -42,7 +42,7 @@ object ArticleRank {
       (col("deg") > 0.0).as(ACTIVE),
       lit(true).as(CHANGED))
 
-    Pregel.run(
+    val ranks = Pregel.run(
       initial = initial,
       edges = edges,
       msgExpr = col(DELTA) * col("weight") / (col("deg") + avgDeg),
@@ -55,7 +55,9 @@ object ArticleRank {
           col("deg") > 0.0).as(ACTIVE),
         (lit(d) * coalesce(col(MSG), lit(0.0)) > config.tolerance).as(CHANGED)),
       config = config.pregel.copy(maxIterations = config.maxIterations))
-      .vertices.select(col("id"), col("rank").as("score"))
+    // the first barrier cut the initial state built from `degrees`
+    Lineage.release(degrees)
+    ranks.vertices.select(col("id"), col("rank").as("score"))
   }
 }
 

@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
  *
  * Spark shape: sketches live EXPLODED as sparse nonzero registers
  * (id, register, rank) — the same hub-safe layout as FastRP — so a
- * superstep is one equi-join + one (id, register) max-aggregate: map-side
- * combine bounds any hub's contribution and no per-group array ever
- * materializes. Ball-size estimates per superstep feed the accumulators
+ * superstep on [[Pregel.iterate]] is one equi-join + one (id, register)
+ * max-aggregate: map-side combine bounds any hub's contribution and no
+ * per-group array ever materializes. Only ACTIVE rows, the registers the
+ * last superstep created or raised, scatter. Ball-size estimates after
+ * superstep t feed the accumulators at the next step (or after the loop):
  *   harmonic(v) += Δ_t(v)/t,   sumDist(v) += t·Δ_t(v)
  * where Δ_t = max(0, E_t − E_{t−1}) is the estimated shell size at radius
  * t. Registers are pure xxhash64 functions of (id, seed): deterministic
@@ -38,6 +40,7 @@ object HyperBall {
 
   /** @return (id, reachable, harmonic, closeness) — estimates */
   def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
+    import Pregel._
     val m = 1 << config.logRegisters
     // standard HLL bias constant
     val alpha = m match {
@@ -48,19 +51,18 @@ object HyperBall {
     }
     val edges = graph.pregelEdges(config.orientation, Aggregation.Count,
       withWeight = false)
-    val nodes = graph.nodes.select(col("id")).cutLineage()
-    val n = nodes.count()
+    val n = graph.nodes.count()
 
     // one nonzero register per node initially: index = low bits of h1,
     // rank ~ Geometric(1/2) from h2 (first-one-bit position), capped at 30.
+    // Not cut here: iterate's first barrier does it.
     val h2u = (pmod(xxhash64(col("id"), lit(config.seed + 1)), lit(1000000007L))
       .cast("double") + 1.0) / 1000000007.0
-    var state = nodes.select(
+    val initial = graph.nodes.select(
       col("id"),
       pmod(xxhash64(col("id"), lit(config.seed)), lit(m.toLong)).cast("int").as("j"),
-      least(floor(-log2(h2u)) + 1, lit(30.0)).cast("int").as("r"))
-      .cutLineage()
-    Lineage.release(nodes)
+      least(floor(-log2(h2u)) + 1, lit(30.0)).cast("int").as("r"),
+      lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA))
 
     /** HLL estimate per node from the sparse register rows: zeros register
      *  contribute 2^0 = 1 each; linear counting below the 2.5m knee.
@@ -81,58 +83,50 @@ object HyperBall {
             .otherwise(raw).as("e"))
     }
 
-    var acc = estimate(state)
+    var acc = estimate(initial)
       .select(col("id"), col("e").as("prevE"),
         lit(0.0).as("harmonic"), lit(0.0).as("sumDist"))
-      .cutLineage()
+      .cutLineage() // so releasing it never reaches the caller's node frame
+    // folds in the estimates of a cut state after superstep t, so it must
+    // run before iterate releases that state
+    def addShell(state: DataFrame, t: Int): Unit = {
+      val delta = greatest(col("e") - col("prevE"), lit(0.0))
+      val nextAcc = acc.join(estimate(state), Seq("id"))
+        .select(col("id"), col("e").as("prevE"),
+          (col("harmonic") + delta / t).as("harmonic"),
+          (col("sumDist") + delta * t).as("sumDist"))
+        .cutLineage()
+      Lineage.release(acc)
+      acc = nextAcc
+    }
 
     // Delta scattering (Boldi-Vigna §4: only counters that CHANGED last
     // iteration propagate): scattering FULL sketches costs
     // edges × m rows per superstep (~370 M at the bench scale — measured
     // 30 s/superstep); scattering only changed registers bounds total
     // message volume by edges × (register updates), a few × edges overall.
-    var changed = state
-    var t = 0
-    var changedRows = 1L
-    while (changedRows > 0 && t < config.maxIterations) {
-      t += 1
-      val msgs = edges
-        .join(changed.select(col("id").as("src"), col("j"), col("r")), Seq("src"))
-        .select(col("dst").as("id"), col("j"), col("r"))
-      val next = state.unionByName(msgs)
-        .groupBy("id", "j").agg(max("r").as("r"))
-        .cutLineage()
-      // a register changed iff its (id, j, r) row is not in the old state
-      // (ranks are monotone, so value-equality detects both new registers
-      // and rank increases).
-      val obs = org.apache.spark.sql.Observation()
-      val nextChanged = next
-        .join(state, Seq("id", "j", "r"), "left_anti")
-        .observe(obs, count(lit(1)).as("rows"))
-        .cutLineage()
-      Lineage.release(state)
-      if (t > 1) Lineage.release(changed)
-      state = next
-      changed = nextChanged
-      changedRows = obs.get("rows").asInstanceOf[Long]
-
-      if (changedRows > 0) {
-        val est = estimate(state)
-        val delta = greatest(col("e") - col("prevE"), lit(0.0))
-        val nextAcc = acc.join(est, Seq("id"))
-          .select(col("id"), col("e").as("prevE"),
-            (col("harmonic") + delta / t).as("harmonic"),
-            (col("sumDist") + delta * t).as("sumDist"))
-          .cutLineage()
-        Lineage.release(acc)
-        acc = nextAcc
-      }
+    val balls = Pregel.iterate(initial, None, PregelConfig(maxIterations = config.maxIterations)) {
+      (state, last) =>
+        if (last.superstep > 0) addShell(state, last.superstep)
+        // messages carry a null `old`, so max(old) is the register's rank
+        // before this superstep (null when the register is new); ranks only
+        // rise, so it changed iff old is null or r > old.
+        val msgs = edges
+          .join(state.where(col(ACTIVE)).select(col("id").as("src"), col("j"), col("r")),
+            Seq("src"))
+          .select(col("dst").as("id"), col("j"), col("r"), lit(null).cast("int").as("old"))
+        val raised = col("old").isNull || col("r") > col("old")
+        StepPlan(state.select(col("id"), col("j"), col("r"), col("r").as("old"))
+          .unionByName(msgs)
+          .groupBy("id", "j").agg(max("r").as("r"), max("old").as("old"))
+          .select(col("id"), col("j"), col("r"), raised.as(ACTIVE), raised.as(CHANGED),
+            lit(0.0).as(DELTA)))
     }
-
+    // a run cut off at maxIterations still holds its last shell
+    if (!balls.converged && balls.supersteps > 0) addShell(balls.vertices, balls.supersteps)
     // the result reads only `acc`: release the working sketch frames so a
     // long-lived session doesn't carry ~m·n rows of dead checkpoint blocks
-    Lineage.release(state)
-    if (t > 0) Lineage.release(changed)
+    Lineage.release(balls.vertices)
     Lineage.release(edges)
 
     val reachable = greatest(col("prevE") - 1.0, lit(0.0))

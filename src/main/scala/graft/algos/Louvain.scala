@@ -56,7 +56,9 @@ object ModularityOptimization {
     val ew = symEdges(graph).cutLineage()
     val m2 = ew.agg(sum("weight")).head().getDouble(0) // = 2m (each edge twice)
     if (m2 == 0.0) {
-      val triv = graph.nodes.select(col("id"), col("id").as("community"))
+      // cut like every other result, so a caller may release it
+      val triv = graph.nodes.select(col("id"), col("id").as("community")).cutLineage()
+      Lineage.release(ew)
       return Result(triv, 0.0, 0)
     }
     // neighbor weights for gain computation: diagonal excluded (a node's
@@ -145,6 +147,8 @@ object ModularityOptimization {
       lastQ = q
       iter += 1
     }
+    Lineage.release(ew)
+    Lineage.release(nodes)
     Result(comm, lastQ, iter)
   }
 
@@ -226,11 +230,16 @@ object Louvain {
           .withColumn("type", lit("REL"))
           .select(col("src"), col("dst"), col("type"), col("weight"))
         val cnodes = cmap.select(col("community").as("id")).distinct()
-        g = PropertyGraph(cnodes.cutLineage(),
-          contracted.cutLineage())
+        val next = PropertyGraph(cnodes.cutLineage(), contracted.cutLineage())
+        // level 0's graph is the caller's, not ours to release
+        if (level > 0) Seq(g.nodes, g.edges).foreach(Lineage.release)
+        g = next
         level += 1
       }
+      Lineage.release(r.communities)
     }
+    // the dendrogram frames (flat is the last) are handed back; the rest can go
+    if (level > 0) Seq(g.nodes, g.edges).foreach(Lineage.release)
     Result(flat, dendrogram.toSeq, modularities.toSeq)
   }
 }

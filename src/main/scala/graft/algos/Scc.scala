@@ -23,6 +23,9 @@ import org.apache.spark.sql.functions._
  *        from r and reaching r form the SCC of r; label the SCC with its
  *        MAX MEMBER id (the output contract) and remove it.
  *
+ * Steps 1 and 2 run on [[Pregel.iterate]]; step 2's frontier is the
+ * ACTIVE members, those reached in the last superstep.
+ *
  * Hash priorities (not raw ids) are the worst-case guard: with id-ordered
  * colors a descending-id chain makes every round assign a single SCC
  * (O(n) outer rounds); with a pseudo-random priority permutation the
@@ -52,7 +55,8 @@ object Scc {
    *  joins. Inside the AQE-off fast-iteration scope, checkpointed frames
    *  carry no stats, so Spark plans every node⋈edge join as sort-merge —
    *  measured 50-100 CPU-s per layout pass at 2.9M edges. The loop
-   *  counters (remaining/changed/grew) give exact row counts for free;
+   *  counters (remaining, and the ACTIVE rows each superstep observes)
+   *  give exact row counts for free;
    *  ≤4M rows ≈ ≤128 MiB of (id, color-struct) broadcast. Above the gate
    *  (the 10^12-file regime) the plan falls back to shuffled joins, the
    *  only correct choice there. */
@@ -174,9 +178,9 @@ object Scc {
         // phase 2: backward reachability of each color root within its
         // class. Restrict the reversed subgraph to SAME-COLOR endpoints
         // ONCE (propagation then stays in-class by construction — no
-        // per-round color join), and expand only the newly-reached
-        // frontier: total edge traffic is one pass over the intra-class
-        // edges instead of O(members·rounds) re-expansion.
+        // per-round color join), and expand only the rows reached in the
+        // previous superstep (ACTIVE): total edge traffic is one pass over
+        // the intra-class edges instead of O(members·rounds) re-expansion.
         val subCStart = System.nanoTime
         val subC = Lineage.sortedCheckpoint(sub
           .join(gate(colors.select(col("id").as("src"), col("color").as("cs")),
@@ -190,29 +194,22 @@ object Scc {
           .repartition(col("src")), "src")
         logPhase("subC-layout", subCStart, "")
         val bwdStart = System.nanoTime
-        var bwdRounds = 0
-        var member = colors.where(col("id") === col("color")("cid"))
-          .select(col("id")).cutLineage()
-        var frontier = member
-        var grew = member.count()
-        while (grew > 0) {
-          bwdRounds += 1
-          val expand = subC
-            .join(gate(frontier.withColumnRenamed("id", "src"), grew), Seq("src"))
+        val backward = Pregel.iterate(
+          colors.where(col("id") === col("color")("cid")).select(col("id"),
+            lit(true).as(ACTIVE), lit(true).as(CHANGED), lit(0.0).as(DELTA)),
+          None, PregelConfig(maxIterations = Int.MaxValue)) { (member, last) =>
+          val fresh = subC
+            .join(gate(member.where(col(ACTIVE)).select(col("id").as("src")),
+              last.activeVertices), Seq("src"))
             .select(col("dst").as("id")).distinct()
-          val fresh = expand.join(gate(member, remaining), Seq("id"), "left_anti")
-            .cutLineage()
-          grew = fresh.count()
-          if (grew > 0) {
-            val nextMember = member.unionByName(fresh).cutLineage()
-            Lineage.release(member)
-            member = nextMember
-          }
-          if (frontier ne member) Lineage.release(frontier)
-          frontier = fresh
+            .join(gate(member.select(col("id")), remaining), Seq("id"), "left_anti")
+          StepPlan(member.select(col("id"), lit(false).as(ACTIVE), lit(false).as(CHANGED),
+              lit(0.0).as(DELTA))
+            .unionByName(fresh.select(col("id"), lit(true).as(ACTIVE), lit(true).as(CHANGED),
+              lit(0.0).as(DELTA))))
         }
-        Lineage.release(frontier)
-        logPhase("backward", bwdStart, s"rounds=$bwdRounds")
+        val member = backward.vertices
+        logPhase("backward", bwdStart, s"rounds=${backward.supersteps}")
         // re-attach each member's color for the output labeling
         val memberColored = member.join(
           gate(colors.select(col("id"), col("color")), remaining), Seq("id"))

@@ -1,7 +1,8 @@
 package graft
 
 import graft.algos._
-import org.apache.spark.sql.Dataset
+import graft.core._
+import org.apache.spark.sql.{Dataset, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** Storage hygiene: an algorithm call releases every checkpoint it made
@@ -36,6 +37,20 @@ class PersistedRddSpec extends SparkSpec {
       ("deltaStepping", wcc, () => left(Traversal.deltaStepping(g, 0L, delta = 3.0))),
       ("Betweenness", wcc, () => left(Betweenness.run(g))),
       ("HyperBall", wcc, () => left(HyperBall.run(g))),
+      ("Closeness Undirected", wcc, () => left(Closeness.run(g))),
+      ("Closeness Natural", wcc,
+        () => left(Closeness.run(g, Closeness.Config(orientation = Orientation.Natural)))),
+      ("Scc", wcc, () => left(Scc.run(g))),
+      ("ArticleRank", wcc, () => left(ArticleRank.run(g))),
+      ("ModularityOptimization", wcc, () => left(ModularityOptimization.run(g).communities)),
+      // Louvain hands back its dendrogram frames too: the row counts what
+      // it leaves beyond them
+      ("Louvain beyond its dendrogram", 0, () => {
+        var frames = 0
+        left { val r = Louvain.run(g); frames = r.dendrogram.size; r.communities } - frames
+      }),
+      ("spanningTree", wcc, () => left(SpanningTree.spanningTree(g, 0L))),
+      ("kSpanningTree k = 3", wcc, () => left(SpanningTree.kSpanningTree(g, 3))),
       ("LabelPropagation", wcc, () => left(LabelPropagation.run(g))),
       ("minimumSpanningForest", wcc, () => left(SpanningTree.minimumSpanningForest(g))))
     val over = table.flatMap { case (name, bound, run) =>
@@ -43,5 +58,17 @@ class PersistedRddSpec extends SparkSpec {
       if (n > bound) Some(s"$name left $n (bound $bound)") else None
     }
     assert(over.isEmpty, s"WCC left $wcc; ${over.mkString("; ")}")
+  }
+
+  test("a call releases none of the caller's cut frames") {
+    // releasing a frame derived from the caller's node frame, but never cut
+    // itself, unpersists the caller's checkpoint blocks
+    for ((name, run) <- Seq[(String, PropertyGraph => Dataset[_])](
+        ("Closeness", Closeness.run(_)), ("HyperBall", HyperBall.run(_)),
+        ("Scc", Scc.run(_)))) {
+      val nodes = g.nodes.cutLineage()
+      run(PropertyGraph(nodes, g.edges)).count()
+      assert(GraftShims.persistedHandle(nodes).nonEmpty, name)
+    }
   }
 }
