@@ -62,8 +62,10 @@ object Bench {
     val results = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val c0 = cpuSec()
+      // a thrown query is marked failed: its short time is not a fast query
       val n = try fn(spark, sfDir).count() catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1L }
+      val status = if (n < 0) "failed" else "ok"
       val sec = (System.nanoTime() - t0) / 1e9
       val cpu = cpuSec() - c0
       // Release this query's result/checkpoint blocks — across ~50 queries
@@ -71,18 +73,22 @@ object Bench {
       // (the r3 full-run 10-30× degradation).
       val released = CacheHygiene.releaseAllExcept(spark, keep)
       val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      System.err.println(f"[bench] $name: $sec%.1fs cpu=$cpu%.1fs ($n rows, aqe=$aqe, " +
+      System.err.println(f"[bench] $name: $status $sec%.1fs cpu=$cpu%.1fs ($n rows, aqe=$aqe, " +
         f"released=$released, ${CacheHygiene.storageLine(spark, keep)}, canary=${canaryMs()}%.0fms)")
-      (name, sec, cpu)
+      (name, sec, cpu, status)
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val cs = results.map { case (k, _, c) => s"\"" + k + "\":" + f"$c%.3f" }
+    val cs = results.map { case (k, _, c, _) => s"\"" + k + "\":" + f"$c%.3f" }
       .mkString("{", ",", "}")
+    val ss = results.map { case (k, _, _, st) => s"\"$k\":\"$st\"" }
+      .mkString("{", ",", "}")
+    val failed = results.count(_._4 == "failed")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val totalCpu = results.map(_._3).sum
     val loadAvg = osBean.getSystemLoadAverage
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""status":$ss,"failed":$failed,""" +
       s""""cpuSeconds":$cs,"totalCpuSec":${f"$totalCpu%.1f"},"loadAvgEnd":${f"$loadAvg%.1f"},""" +
       s""""warmupSec":$warmupSec,"cpus":$cpus,"maxHeapMiB":$maxHeapMiB,"sf":"$sfDir"}"""
     // stdout (unprefixed: build.sbt sets run/outputStrategy := StdoutOutput so

@@ -45,9 +45,9 @@ object Betweenness {
     val divisor = if (config.orientation == Orientation.Undirected) 2.0 else 1.0
     // forward phase joins on src every level: prepared src layout; the
     // self-loop filter on top preserves partitioning and ordering.
-    val edges = graph.pregelEdges(config.orientation, Aggregation.Count,
-        withWeight = false)
-      .where(col("src") =!= col("dst"))
+    val prepared = graph.pregelEdges(config.orientation, Aggregation.Count,
+      withWeight = false)
+    val edges = prepared.where(col("src") =!= col("dst"))
     // backward phase joins on dst every level: ONE extra shuffle of the
     // already-deduped frame buys exchange/sort-free joins down the levels.
     val edgesByDst = Lineage.sortedCheckpoint(edges.repartition(col("dst")), "dst")
@@ -122,7 +122,7 @@ object Betweenness {
       .select(col("id"), coalesce(col("score"), lit(0.0)).as("score"))
       .cutLineage()
     // the cut result reads none of the edge layouts, levels or deltas
-    (Seq(edges, edgesByDst) ++ levels ++ deltaParts).foreach(Lineage.release)
+    (Seq(prepared, edgesByDst) ++ levels ++ deltaParts).foreach(Lineage.release)
     result
   }
 }

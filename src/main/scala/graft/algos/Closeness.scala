@@ -44,12 +44,10 @@ object Closeness {
       withWeight = false)
     val n = graph.nodes.count()
 
-    // (id, farness, harmonic, reached), cut so that releasing it never
-    // reaches the caller's nodes. `addWave` reads the wave a cut state
-    // holds, so it must run before that state is released.
+    // (id, farness, harmonic, reached). `addWave` reads the wave a cut
+    // state holds, so it must run before that state is released.
     var acc = graph.nodes.select(col("id"),
       lit(0.0).as("farness"), lit(0.0).as("harmonic"), lit(0L).as("reached"))
-      .cutLineage()
     def addWave(state: DataFrame, depth: Int): Unit = {
       val d = depth.toDouble
       val contrib = state.where(col(ACTIVE))

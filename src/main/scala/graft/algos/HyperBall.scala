@@ -86,7 +86,6 @@ object HyperBall {
     var acc = estimate(initial)
       .select(col("id"), col("e").as("prevE"),
         lit(0.0).as("harmonic"), lit(0.0).as("sumDist"))
-      .cutLineage() // so releasing it never reaches the caller's node frame
     // folds in the estimates of a cut state after superstep t, so it must
     // run before iterate releases that state
     def addShell(state: DataFrame, t: Int): Unit = {

@@ -29,9 +29,9 @@ object K1Coloring {
     // chains (gather, conflict validation) START with a join on src, so
     // the big edge side never re-shuffles or re-sorts across rounds. The
     // self-loop filter on top preserves the layout.
-    val eu = graph.pregelEdges(Orientation.Undirected, Aggregation.Count,
-        withWeight = false)
-      .where(col("src") =!= col("dst"))
+    val prepared = graph.pregelEdges(Orientation.Undirected, Aggregation.Count,
+      withWeight = false)
+    val eu = prepared.where(col("src") =!= col("dst"))
 
     import Pregel._
     // a queued node is both ACTIVE and CHANGED: the loop ends once none is
@@ -93,7 +93,7 @@ object K1Coloring {
           lit(0.0).as(DELTA)))
     }
     // the result is checkpointed, so the prepared edge frame's blocks can go.
-    Lineage.release(eu)
+    Lineage.release(prepared)
     result.vertices.select(col("id"), col("color"))
   }
 }

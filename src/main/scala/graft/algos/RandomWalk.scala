@@ -35,7 +35,12 @@ object RandomWalk {
       orientation: Orientation = Orientation.Natural)
 
   /** @return (walkId, start, path: array<long>) */
-  def run(graph: PropertyGraph, config: Config = Config()): DataFrame = {
+  def run(graph: PropertyGraph, config: Config = Config()): DataFrame =
+    walkState(graph, config).select(col("walkId"), col("start"), col("path"))
+
+  /** The walks' cut state: (walkId, start, path, current, stopped). A
+   *  caller that is done with the walks releases it. */
+  private[graft] def walkState(graph: PropertyGraph, config: Config): DataFrame = {
     // adjacency prepared by id (hash + sort + AQE-off checkpoint): every
     // step joins walks⋈adj on the node id, so only the walk-state side
     // shuffles/sorts per step (see PropertyGraph.pregelEdges for why the
@@ -123,7 +128,7 @@ object RandomWalk {
     }
     // walks is checkpointed; the prepared adjacency's blocks can go.
     Lineage.release(adj)
-    walks.select(col("walkId"), col("start"), col("path"))
+    walks
   }
 
   private def spark_range(spark: org.apache.spark.sql.SparkSession, n: Int) =

@@ -57,8 +57,9 @@ object ShortestPaths {
    *  action (the Observation rides `plan.next`), so the bound costs no job.
    *  The AQE decision is the prepared layout's (`ctx.bigWork`), made once.
    *  @param heuristic optional (id, h) frame enabling A* pruning toward `target`
-   *  @return cut (id, dist, pred) — pred null for source/unreached; the
-   *          caller releases it */
+   *  @return the cut state: (id, dist, pred) — pred null for
+   *          source/unreached — plus the loop's columns; the caller
+   *          releases it */
   private def relaxCore(ctx: Ctx,
       excludedEdges: Set[(Long, Long)], excludedNodes: Set[Long],
       source: Long, target: Long, heuristic: Option[DataFrame],
@@ -110,7 +111,7 @@ object ShortestPaths {
         ub = () => Option(obs.get("tdist")).fold(Double.PositiveInfinity)(_.asInstanceOf[Double])
         StepPlan(next.observe(obs, min(when(col("id") === target, col("dist"))).as("tdist")))
       }
-    }.vertices.select(col("id"), col("dist"), col("pred"))
+    }.vertices
   }
 
   /** Walk preds target→source. None when target unreached. One collect of

@@ -33,7 +33,8 @@ object SpanningTree {
     import Pregel._
     val canon = canonical(graph).cutLineage()
     var comp = graph.nodes.select(col("id"), col("id").as("comp")).cutLineage()
-    var tree = canon.limit(0).cutLineage()
+    var tree = canon.select(col("a").as("src"), col("b").as("dst"), col("weight"))
+      .limit(0).cutLineage()
     var crossing = 1L
     while (crossing > 0) {
       val e = canon
@@ -50,7 +51,7 @@ object SpanningTree {
           .unionByName(e.select(col("cb").as("c"),
             struct(col("weight"), col("a"), col("b")).as("e")))
           .groupBy("c").agg(min("e").as("e"))
-          .select(col("e.a").as("a"), col("e.b").as("b"), col("e.weight").as("weight"))
+          .select(col("e.a").as("src"), col("e.b").as("dst"), col("e.weight").as("weight"))
           .distinct()
           .cutLineage()
         val treeNext = tree.unionByName(perComp).cutLineage()
@@ -60,8 +61,8 @@ object SpanningTree {
         // merge chosen components: min-label propagation with pointer
         // jumping over the (tiny: one edge per component) merge graph.
         val merges = perComp
-          .join(comp.select(col("id").as("a"), col("comp").as("ca")), Seq("a"))
-          .join(comp.select(col("id").as("b"), col("comp").as("cb")), Seq("b"))
+          .join(comp.select(col("id").as("src"), col("comp").as("ca")), Seq("src"))
+          .join(comp.select(col("id").as("dst"), col("comp").as("cb")), Seq("dst"))
           .select(col("ca"), col("cb")).cutLineage()
         val sym = merges.select(col("ca").as("x"), col("cb").as("y"))
           .unionByName(merges.select(col("cb").as("x"), col("ca").as("y")))
@@ -95,7 +96,7 @@ object SpanningTree {
     }
     Lineage.release(comp)
     Lineage.release(canon)
-    tree.select(col("a").as("src"), col("b").as("dst"), col("weight"))
+    tree
   }
 
   /** Maximum spanning forest — Prim.MAX_OPERATOR (Prim.java:33-40):
@@ -109,7 +110,7 @@ object SpanningTree {
    *  (Prim.java:49 — the reference only spans the start component). */
   def spanningTree(graph: PropertyGraph, startNode: Long): DataFrame = {
     val forest = minimumSpanningForest(graph)
-    val treeComp = Wcc.run(PropertyGraph.fromEdges(
+    val (treeComp, wcc) = Wcc.runWithMetrics(PropertyGraph.fromEdges(
       forest.select(col("src"), col("dst"))))
     val startComp = treeComp.where(col("id") === startNode)
       .select(col("component")).head().getLong(0)
@@ -118,7 +119,7 @@ object SpanningTree {
       .join(members.withColumnRenamed("id", "src"), Seq("src"))
       .select(col("src"), col("dst"), col("weight"))
       .cutLineage()
-    Seq(forest, treeComp).foreach(Lineage.release)
+    Seq(forest, wcc.vertices).foreach(Lineage.release)
     tree
   }
 

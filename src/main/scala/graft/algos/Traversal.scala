@@ -178,9 +178,9 @@ object Traversal {
     val srcs = sources.getOrElse(graph.nodes.select(col("id")))
     // unweighted = unit weights: a pair settles at the first superstep that
     // reaches it, which is its BFS depth
-    val edges = if (weighted) graph.pregelEdges(orientation, Aggregation.Min)
+    val prepared = if (weighted) graph.pregelEdges(orientation, Aggregation.Min)
       else graph.pregelEdges(orientation, Aggregation.Count, withWeight = false)
-        .withColumn("weight", lit(1.0))
+    val edges = if (weighted) prepared else prepared.withColumn("weight", lit(1.0))
     // batched Bellman-Ford on (s, v) pairs; a pair whose distance
     // improved is the only one that relaxes its out-edges next round
     val initial = srcs.select(col("id").as("s"), col("id").as("v"), lit(0.0).as("d"),
@@ -200,7 +200,7 @@ object Traversal {
             coalesce(col("nd"), lit(Double.PositiveInfinity))).as("d"),
           updated.as(ACTIVE), updated.as(CHANGED), lit(0.0).as(DELTA)))
     }
-    Lineage.release(edges)
+    Lineage.release(prepared)
     result.vertices.select(col("s").as("source"), col("v").as("target"),
       col("d").as("distance"))
   }

@@ -14,9 +14,10 @@ import org.apache.spark.sql.{DataFrame, GraftShims}
 object Lineage {
   def cut(df: DataFrame): DataFrame = GraftShims.cutLineage(df)
 
-  /** Release the checkpoint blocks behind a cut frame (safe no-op when the
-   *  frame was never checkpointed). Call on SUPERSEDED superstep states —
-   *  never on a frame still handed to the caller. */
+  /** Release the checkpoint blocks behind a cut frame, or a persisted
+   *  frame's cache. A no-op on any other frame, including one derived from
+   *  a cut (`cut.select(...)`): that cut's blocks stay. Call on SUPERSEDED
+   *  superstep states — never on a frame still handed to the caller. */
   def release(df: DataFrame): Unit =
     GraftShims.persistedHandle(df).foreach(_.unpersist(blocking = false))
 

@@ -249,7 +249,7 @@ object GraphSage {
   private def trainingSamples(graph: PropertyGraph, searchDepth: Int,
       unigramTableSize: Int, seed: Long, orientation: Orientation)
       : (DataFrame, DataFrame) = {
-    val walks = RandomWalk.run(graph, RandomWalk.Config(
+    val walks = RandomWalk.walkState(graph, RandomWalk.Config(
       steps = searchDepth, walksPerNode = 1, seed = seed,
       orientation = orientation))
     val pairs = walks

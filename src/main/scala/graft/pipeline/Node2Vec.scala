@@ -84,7 +84,7 @@ object Node2Vec {
     runWithStats(graph, config).embeddings
 
   def runWithStats(graph: PropertyGraph, config: Config = Config()): TrainResult = {
-    val walks = RandomWalk.run(graph, RandomWalk.Config(
+    val walks = RandomWalk.walkState(graph, RandomWalk.Config(
       steps = math.max(1, config.walkLength - 1),
       walksPerNode = config.walksPerNode,
       seed = config.seed,

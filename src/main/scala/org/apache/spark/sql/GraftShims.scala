@@ -35,7 +35,12 @@ object GraftShims {
    *  ancestor with a storage level. Unpersisting it releases the blocks;
    *  without this, a long superstep loop accumulates one block set per
    *  iteration until the ContextCleaner's GC-driven cleanup catches up —
-   *  observed as heap thrash + heartbeat loss on a 46 M-edge run. */
+   *  observed as heap thrash + heartbeat loss on a 46 M-edge run.
+   *
+   *  Only a cut (a bare LogicalRDD scan) or a frame persisted itself has
+   *  one: for a frame derived from either, the walk would reach its
+   *  parent's blocks, and releasing it would drop a frame the caller
+   *  still holds. */
   def persistedHandle(df: DataFrame): Option[RDD[_]] = {
     @annotation.tailrec
     def walk(r: RDD[_], depth: Int): Option[RDD[_]] =
@@ -44,7 +49,10 @@ object GraftShims {
         case Some(p) if depth < 8 => walk(p, depth + 1)
         case _ => None
       }
-    walk(df.asInstanceOf[CDataFrame].queryExecution.toRdd, 0)
+    val qe = df.asInstanceOf[CDataFrame].queryExecution
+    val owns = qe.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] ||
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    if (owns) walk(qe.toRdd, 0) else None
   }
 
   /** Wrap a raw Catalyst Expression as a user-facing Column (the Spark 4

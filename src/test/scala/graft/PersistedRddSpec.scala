@@ -71,4 +71,25 @@ class PersistedRddSpec extends SparkSpec {
       assert(GraftShims.persistedHandle(nodes).nonEmpty, name)
     }
   }
+
+  test("release drops only a cut's or a persisted frame's own blocks") {
+    import org.apache.spark.storage.StorageLevel
+    val cut = g.nodes.cutLineage()
+    val blocks = GraftShims.persistedHandle(cut).get
+    val cached = g.nodes.select(col("id"), lit(1).as("one")).persist()
+    cached.count()
+    val cacheBlocks = GraftShims.persistedHandle(cached).get
+    // frames derived from the cut or the cached frame own no blocks
+    for (derived <- Seq(cut.select(col("id")), cut.where(col("id") > 3), cached.select(col("id"))))
+      Lineage.release(derived)
+    val persisted = spark.sparkContext.getPersistentRDDs
+    assert(persisted.contains(blocks.id) && persisted.contains(cacheBlocks.id))
+    assert(cut.count() == 60)
+    Lineage.release(cut)
+    Lineage.release(cached)
+    for (r <- Seq(blocks, cacheBlocks)) {
+      assert(r.getStorageLevel == StorageLevel.NONE)
+      assert(!spark.sparkContext.getPersistentRDDs.contains(r.id))
+    }
+  }
 }
